@@ -105,17 +105,17 @@ class Request:
     terms: list[str] | None = None
 
 
-# Requests per block of ten. Each block is shuffled, so any window of
-# a few blocks carries this mix. By latency the kinds sort as IVF <
-# registered query < search_drawing < BM25 < HNSW, so these shares put
-# the median inside the search_drawing group and the 90th percentile
-# inside the HNSW group rather than on a boundary between kinds.
+# Requests per block: one of each kind the benchmark sends. No traffic
+# record weights them (the reference serves only /search_drawing and
+# publishes no mix), so equal shares are an assumption, not a
+# measurement. Each block is shuffled, and a run measures whole blocks,
+# so every run sends the same mix.
 SERVE_BLOCK = {
-    "ivf_probe": 3,
+    "search_drawing": 1,
+    "ivf_probe": 1,
+    "hnsw_search": 1,
+    "bm25_probe": 1,
     "registry_knn": 1,
-    "search_drawing": 2,
-    "bm25_probe": 2,
-    "hnsw_search": 2,
 }
 
 

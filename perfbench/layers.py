@@ -1,6 +1,6 @@
 """Per-layer metrics of a traced run, derived from its spans (see
 README.md for the layer -> metric -> end-to-end map). Only spans that
-start once measuring has begun count, except the set-up builds."""
+start inside the measured window count, except the set-up builds."""
 
 from __future__ import annotations
 
@@ -56,14 +56,14 @@ def _mean(values) -> float:
 
 def per_layer(tr: Tracer, res: dict, session_s: float, cores: int) -> dict[str, float]:
     m = {name: 0.0 for name, _, _ in PER_LAYER}
-    t_measure = res["t_measure"]
+    t_measure, t_end = res["t_measure"], res.get("t_end", float("inf"))
 
     def measured(name: str):
-        return [s for s in tr.named(name) if s.t0 >= t_measure]
+        return [s for s in tr.named(name) if t_measure <= s.t0 < t_end]
 
     m["session.get_session.s"] = session_s
     for name in _BUILDS:
-        # pipeline builds inside its measured passes; serve and upsert in set-up
+        # pipeline builds inside its measured passes, serve in set-up
         spans = measured(name) or tr.named(name)
         m[f"{name}.s"] = _median(s.ms / 1000.0 for s in spans)
     for metric, name in _TIMED.items():

@@ -26,13 +26,20 @@ import numpy as np
 from perfbench import gen, oracles
 
 SIZES = {
-    "full": {"serve_vectors": 600, "pipeline_rows": 5000, "pipeline_delta": 150, "pipeline_warm": 400},
+    "full": {"serve_vectors": 600, "pipeline_rows": 15000, "pipeline_delta": 150, "pipeline_warm": 400},
     "tiny": {"serve_vectors": 120, "pipeline_rows": 600, "pipeline_delta": 40, "pipeline_warm": 200},
 }
 
 N_CELLS = 16
 K = 10
 SERVE_CLIENTS = 2
+# serve's warm-up, in request blocks: CPU per request falls by about a
+# third over the first few blocks of a JVM's life, while the JIT
+# compiles the request paths
+WARM_BLOCKS = 2
+# IVF probes sent after serve's measured window, so that recall rests on
+# at least this many queries in every run, however few the window held
+RECALL_PROBES = 32
 MINHASH_THRESHOLD = 0.3  # operators.dedup.minhash_lsh_pairs default
 MIN_DEDUP_RECALL = 0.5
 EMBED_DIM = gen.DIM
@@ -122,6 +129,49 @@ def tree_cpu_s() -> float:
     return total / os.sysconf("SC_CLK_TCK")
 
 
+def jit_cpu_s() -> float:
+    """CPU seconds of the JVM's JIT compiler threads. The session keeps
+    them alive (-XX:-UseDynamicNumberOfCompilerThreads), so a reading
+    at the start and one at the end of a window give their share of
+    the window."""
+    from pyspark import SparkContext
+
+    task_dir = f"/proc/{SparkContext._gateway.proc.pid}/task"
+    total = 0
+    for tid in os.listdir(task_dir):
+        try:
+            with open(f"{task_dir}/{tid}/comm") as f:
+                comm = f.read()
+            with open(f"{task_dir}/{tid}/stat") as f:
+                s = f.read()
+        except OSError:  # exited while listing
+            continue
+        if comm.startswith(("C1 CompilerThre", "C2 CompilerThre")):
+            rest = s[s.rfind(")") + 2 :].split()
+            total += int(rest[11]) + int(rest[12])
+    return total / os.sysconf("SC_CLK_TCK")
+
+
+class CpuMeter:
+    """CPU spent in a window by the process tree, and the JIT compiler's
+    share of it. The JIT keeps compiling while requests run (Spark
+    generates classes for each new plan), so its share is part of what
+    an operation costs; the traced run reports it on its own."""
+
+    def __init__(self):
+        self.tree0, self.jit0 = tree_cpu_s(), jit_cpu_s()
+
+    def read(self) -> tuple[float, float]:
+        """(all, JIT) CPU seconds since the meter started."""
+        return tree_cpu_s() - self.tree0, jit_cpu_s() - self.jit0
+
+
+def jobs_started(spark) -> int:
+    """Spark jobs submitted so far (the scheduler numbers them 0, 1, 2,
+    ... in submit order)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
 def pct(values, q: float) -> float:
     return float(np.percentile(np.asarray(values, dtype=np.float64), q))
 
@@ -154,6 +204,7 @@ class Tiers:
         x, labels = gen.vectors(run.rng, n)
         self.docs = gen.texts(run.rng, n)
         self.stream = gen.request_stream(run.rng, x, 20000)
+        self.recall_probes = [gen.Request("ivf_probe", vec=v) for v in gen.noisy_copies(run.rng, x, RECALL_PROBES)]
         self.sf = os.path.join(run.root, "sf")
         gen.write_sf_dir(self.sf, x, labels, self.docs)
         self.user_bytes = x.nbytes + sum(len(t.encode()) for t in self.docs)
@@ -164,6 +215,7 @@ class Tiers:
         self.registry_fn = None
         self.registry_answer = None
         self.recalls: dict[str, list[float]] = {}
+        self.answers: list = []
         self.latencies: dict[str, list[float]] = {}
 
     def registry_oracle(self):
@@ -258,7 +310,8 @@ class Tiers:
         return oracles.check_registry(*ans, *self.registry_answer)
 
     def handle(self, rid: int, req: gen.Request) -> None:
-        """One client request: timed from the client, checked after."""
+        """One client request, timed from the client. Its answer is
+        kept for :meth:`check_answers` after the measured window."""
         run = self.run
 
         def go():
@@ -273,42 +326,66 @@ class Tiers:
         ans, df = out
         if df is not None:
             run.tracer.catalyst(df, rid)
-        err = self.check(req, ans)
-        run.outcome(err)
         with run.lock:
             self.latencies.setdefault(req.kind, []).append(ms)
-            if err is None and req.kind in ("ivf_probe", "hnsw_search"):
+            self.answers.append((req, ans))
+
+    def check_answers(self, answers: list, recalls: bool) -> None:
+        """Check each (request, answer); with ``recalls``, also record
+        the ANN tiers' recall@10."""
+        for req, ans in answers:
+            err = self.check(req, ans)
+            self.run.outcome(err)
+            if recalls and err is None and req.kind in ("ivf_probe", "hnsw_search"):
                 self.recalls.setdefault(req.kind, []).append(
                     oracles.recall([i for i, _ in ans], self.vo, req.vec, K)
                 )
 
-    def warm(self) -> None:
-        """One request of each kind from the end of the stream, so the
+    def send_all(self, requests) -> list:
+        """Send ``requests`` through the serve clients, untimed; returns
+        the requests and their answers, to check later."""
+        done = []
+
+        def go(rid, req):
+            out = self.run.attempt(lambda: self.call(req))
+            if out is not None:
+                done.append((req, out[0]))
+
+        closed_loop(SERVE_CLIENTS, enumerate(requests), go)
+        return done
+
+    def warm(self) -> list:
+        """``WARM_BLOCKS`` blocks from the end of the stream, so the
         measured requests find no cold code path."""
-        seen = set()
-        for rid in range(len(self.stream) - 1, 0, -1):
-            req = self.stream[rid]
-            if req.kind not in seen:
-                seen.add(req.kind)
-                self.handle(-rid, req)
-        self.latencies.clear()
-        self.recalls.clear()
+        return self.send_all(self.stream[-WARM_BLOCKS * sum(gen.SERVE_BLOCK.values()) :])
 
 
-def closed_loop(n_clients: int, stream, handle, deadline: float) -> float:
-    """``n_clients`` threads each send the next request of ``stream``
-    once their previous one completed, until ``deadline``. Returns the
-    wall time from the first send to the last completion."""
-    it = iter(enumerate(stream))
+def closed_loop(
+    n_clients: int, requests, handle, deadline: float = float("inf"), block: int = 1
+) -> tuple[float, int]:
+    """``n_clients`` threads each send the next of the ``(rid,
+    request)`` pairs once their previous one completed, until
+    ``deadline`` (or the end of ``requests``), and then on to the end of
+    the current block of ``block`` requests, so a run sends whole
+    blocks. Returns the wall time from the first send to the last
+    completion and the number of requests sent."""
+    it = iter(requests)
     lock = threading.Lock()
     errors: list[BaseException] = []
+    sent = 0
 
     def client():
+        nonlocal sent
         try:
-            while time.perf_counter() < deadline:
+            while True:
                 with lock:
-                    rid, req = next(it)
-                handle(rid, req)
+                    if sent % block == 0 and time.perf_counter() >= deadline:
+                        return
+                    nxt = next(it, None)
+                    if nxt is None:
+                        return
+                    sent += 1
+                handle(*nxt)
         except BaseException as exc:  # re-raised after join
             errors.append(exc)
 
@@ -320,7 +397,7 @@ def closed_loop(n_clients: int, stream, handle, deadline: float) -> float:
         t.join()
     if errors:
         raise errors[0]
-    return time.perf_counter() - t0
+    return time.perf_counter() - t0, sent
 
 
 def serve(run: Run) -> dict:
@@ -329,10 +406,16 @@ def serve(run: Run) -> dict:
         tiers.build()
     tiers.registry_answer = tiers.registry_oracle()
     with run.setup():
-        tiers.warm()
-    t_measure, cpu0 = time.perf_counter(), tree_cpu_s()
-    wall = closed_loop(SERVE_CLIENTS, tiers.stream, tiers.handle, t_measure + run.seconds)
-    cpu_s = tree_cpu_s() - cpu0
+        warm = tiers.warm()
+    tiers.check_answers(warm, recalls=False)
+    t_measure, meter, jobs0 = time.perf_counter(), CpuMeter(), jobs_started(run.spark)
+    wall, sent = closed_loop(
+        SERVE_CLIENTS, enumerate(tiers.stream), tiers.handle, t_measure + run.seconds, sum(gen.SERVE_BLOCK.values())
+    )
+    cpu_s, jit_s = meter.read()
+    jobs = jobs_started(run.spark) - jobs0
+    t_end = time.perf_counter()
+    tiers.check_answers(tiers.answers + tiers.send_all(tiers.recall_probes), recalls=True)
     lat = [ms for v in tiers.latencies.values() for ms in v]
     recall = {k: statistics.fmean(tiers.recalls.get(k) or [0.0]) for k in ("ivf_probe", "hnsw_search")}
     return {
@@ -342,7 +425,7 @@ def serve(run: Run) -> dict:
             "throughput_per_s": len(lat) / wall,
         },
         "e2e": {
-            "cpu_ms_per_op": cpu_s * 1000.0 / len(lat),
+            "spark_jobs_per_op": jobs / sent,
             "recall": recall["ivf_probe"],
             "stored_bytes_per_user_byte": du(*tiers.dirs) / tiers.user_bytes,
         },
@@ -351,16 +434,21 @@ def serve(run: Run) -> dict:
             "search_p90_ms": pct(lat, 90),
             "searches": len(lat),
             "search_qps": len(lat) / wall,
+            "cpu_ms_per_op": cpu_s * 1000.0 / sent,
+            "jit_ms_per_op": jit_s * 1000.0 / sent,
             "ivf_recall_at_10": recall["ivf_probe"],
             "hnsw_recall_at_10": recall["hnsw_search"],
             **{f"{k}_p50_ms": pct(v, 50) for k, v in sorted(tiers.latencies.items())},
         },
         "layer": {
             **tlog_stats(tiers.dirs),
+            "process.cpu_ms_per_op": cpu_s * 1000.0 / sent,
+            "jvm.jit_ms_per_op": jit_s * 1000.0 / sent,
             "ann.ivf_probe.recall_at_10": recall["ivf_probe"],
             "graph_ann.hnsw_search.recall_at_10": recall["hnsw_search"],
         },
         "t_measure": t_measure,
+        "t_end": t_end,
         "wall_s": wall,
         "ops": len(lat),
     }
@@ -404,7 +492,8 @@ class BatchPass:
         self.user_bytes = sum(len(p) for p in c.payloads) + sum(len(t.encode()) for t in c.docs)
         self.user_bytes += sum(len(t.encode()) + len(p or b"") for _, t, p in self.delta)
         self.compacted_bytes = 0
-        self.cpu_s = 0.0
+        self.cpu_s = self.jit_s = 0.0
+        self.jobs = 0
         self.last: str | None = None
         self.recall = float("nan")
 
@@ -537,24 +626,25 @@ class BatchPass:
             return f"read-your-writes: drawing numbers matched docs {sorted(found)[:5]}"
         return None
 
-    def timed_pass(self, seq: int) -> float | None:
-        """Run, time and check one pass; returns its wall seconds, or
-        None when it raised."""
-        t0, cpu0 = time.perf_counter(), tree_cpu_s()
+    def timed_pass(self, seq: int) -> tuple | None:
+        """Run and time one pass; sets its CPU seconds and job count and
+        returns its wall seconds and output, or None when it raised."""
+        t0, meter, jobs0 = time.perf_counter(), CpuMeter(), jobs_started(self.run.spark)
         done = self.run.attempt(lambda: self.run_pass(seq))
         wall = time.perf_counter() - t0
-        self.cpu_s = tree_cpu_s() - cpu0
-        if done is None:
-            return None
-        out = done[0]
+        self.cpu_s, self.jit_s = meter.read()
+        self.jobs = jobs_started(self.run.spark) - jobs0
+        return None if done is None else (wall, done)
+
+    def check_pass(self, done: tuple) -> None:
+        """Check a pass's output, untimed; it becomes the last output."""
         checked = self.run.attempt(lambda: self.check(*done))
         if checked is not None:
             err, self.recall = checked
             self.run.outcome(err)
         if self.last is not None:
             shutil.rmtree(self.last, ignore_errors=True)
-        self.last = out
-        return wall
+        self.last = done[0]
 
 
 def pipeline(run: Run) -> dict:
@@ -562,20 +652,26 @@ def pipeline(run: Run) -> dict:
     warm = BatchPass(run, "warm", sz["pipeline_warm"], sz["pipeline_delta"] // 4)
     main = BatchPass(run, "main", sz["pipeline_rows"], sz["pipeline_delta"])
     with run.setup():
-        warm.timed_pass(0)
+        warmed = warm.timed_pass(0)
+    if warmed is not None:
+        warm.check_pass(warmed[1])
     shutil.rmtree(warm.dir, ignore_errors=True)
-    walls, cpus, recalls, compacted, seq, took = [], [], [], [], 0, 0.0
+    walls, cpus, jits, jobs, recalls, compacted, seq, took = [], [], [], [], [], [], 0, 0.0
     t_measure = time.perf_counter()
     # whole passes only: another starts if the last one's time still fits
     while seq == 0 or time.perf_counter() + took <= t_measure + run.seconds:
         t0 = time.perf_counter()
-        wall = main.timed_pass(seq)
-        took = time.perf_counter() - t0
-        if wall is not None:
+        timed = main.timed_pass(seq)
+        if timed is not None:
+            wall, done = timed
+            main.check_pass(done)
             walls.append(wall)
             cpus.append(main.cpu_s)
+            jits.append(main.jit_s)
+            jobs.append(main.jobs)
             recalls.append(main.recall)
             compacted.append(main.compacted_bytes)
+        took = time.perf_counter() - t0
         seq += 1
     rate = main.rows * len(walls) / sum(walls) if walls else float("nan")
     return {
@@ -585,13 +681,15 @@ def pipeline(run: Run) -> dict:
             "throughput_per_s": rate,
         },
         "e2e": {
-            "cpu_ms_per_op": statistics.median(cpus) * 1000.0 if cpus else float("nan"),
+            "spark_jobs_per_op": float(statistics.median(jobs)) if jobs else float("nan"),
             "recall": statistics.fmean(recalls) if recalls else float("nan"),
             "stored_bytes_per_user_byte": du(main.last) / main.user_bytes if walls else float("nan"),
         },
         "summary": {
             "pass_ms": pct(walls, 50) * 1000.0 if walls else float("nan"),
             "pipeline_rows_per_s": rate,
+            "cpu_ms_per_op": statistics.median(cpus) * 1000.0 if cpus else float("nan"),
+            "jit_ms_per_op": statistics.median(jits) * 1000.0 if jits else float("nan"),
             "pipeline_input_rows": main.rows,
             "passes": len(walls),
             "dedup_recall": statistics.fmean(recalls) if recalls else float("nan"),
@@ -600,9 +698,11 @@ def pipeline(run: Run) -> dict:
         "layer": {
             **(tlog_stats([f"{main.last}/{d}" for d in ("ivf", "inverted", "id_mapping")]) if walls else {}),
             "compaction.bytes_rewritten": float(statistics.median(compacted)) if compacted else 0.0,
+            "process.cpu_ms_per_op": statistics.median(cpus) * 1000.0 if cpus else 0.0,
+            "jvm.jit_ms_per_op": statistics.median(jits) * 1000.0 if jits else 0.0,
         },
         "t_measure": t_measure,
-        "wall_s": time.perf_counter() - t_measure,
+        "wall_s": sum(walls),
         "ops": len(walls),
     }
 
