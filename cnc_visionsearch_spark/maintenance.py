@@ -8,9 +8,11 @@ accrete between runs:
    physically — rewrites only touched cell partitions, restores
    tombstone-free probe plans.
 2. **Compact** (:func:`sources.formats.compact_layout` over cells/ and
-   pq_codes/ + pq_trained_codes/, the inverted index's postings/ and
-   the NSW graph/ when their paths are passed;
-   :func:`streaming.pipelines.compact_id_mapping` for the
+   pq_codes/ + pq_trained_codes/; the inverted index and the NSW graph
+   — both transaction-log tables — through their own rewrite commits,
+   :func:`operators.text_index.inverted_compact` and
+   :func:`operators.graph_ann.nsw_compact`, when their paths are
+   passed; :func:`streaming.pipelines.compact_id_mapping` for the
    upsert state): bound the one-file-per-partition-per-batch accretion
    of the append/upsert paths.
 3. **Audit** (cell-population skew, the ann_ivf_cell_skew measure):
@@ -30,6 +32,8 @@ import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from cnc_visionsearch_spark.sources.tlog import TLog
 
 __all__ = ["run_index_maintenance", "forget_vectors"]
 
@@ -89,60 +93,56 @@ def run_index_maintenance(
         skew = float(row.max_cell) * float(row.n_cells) / float(row.n_vectors)
         report["skew_ratio"] = round(skew, 4)
         report["recommend_retrain"] = skew >= skew_retrain_threshold
-    # the inverted layout's delete lifecycle: apply tombstones
-    # physically BEFORE compaction (vacuum rewrites touched buckets;
-    # compacting first would churn files the vacuum rewrites again)
+    # the inverted layout's delete lifecycle: vacuum is one rewrite
+    # commit applying tombstones physically BEFORE compaction (vacuum
+    # rewrites touched buckets; compacting first would churn files the
+    # vacuum rewrites again), compaction its own; physical removal of
+    # unreferenced files rides the table's tlog vacuum (retention-
+    # gated), all under conflict arbitration. Report figures are live
+    # file counts per subtable, read from the snapshots.
     if inverted_path is not None:
         from cnc_visionsearch_spark.operators.text_index import (
+            TLOG_DOCLENS_TAG,
             TLOG_TOMBS_TAG,
-            _tlog_of,
             inverted_compact,
             inverted_vacuum,
         )
 
-        t = _tlog_of(inverted_path)
-        if t is not None:
-            # transactional layout: vacuum is one rewrite commit,
-            # compaction its own (inverted_compact); physical removal
-            # of unreferenced files rides the table's tlog vacuum
-            # (retention-gated), all under conflict arbitration
-            had = bool(t.snapshot().files_in([TLOG_TOMBS_TAG]))
-            inverted_vacuum(spark, inverted_path)
-            inverted_compact(spark, inverted_path)
-            t.vacuum()
-            report["inverted_vacuum_applied"] = had
-            inverted_path = None  # the legacy dir compaction below n/a
-        else:
-            had = os.path.exists(f"{inverted_path}/tombstones")
-            inverted_vacuum(spark, inverted_path)
-            report["inverted_vacuum_applied"] = had
-    # append-accreting auxiliary layouts: same settled-skip compaction
-    # discipline as the cell tables (inverted postings per term bucket,
-    # NSW edges per src bucket)
-    for label, root_dir, part_col in (
-        ("postings", inverted_path and f"{inverted_path}/postings", "bucket"),
-        ("doclens", inverted_path and f"{inverted_path}/doclens", None),
-        ("nsw_graph", nsw_path and f"{nsw_path}/graph", "src_bucket"),
-    ):
-        if not root_dir or not os.path.exists(root_dir):
-            continue
-        before = n_files(root_dir)
-        n_parts = (
-            sum(
-                1
-                for d in os.listdir(root_dir)
-                if d.startswith(f"{part_col}=")
-            )
-            if part_col
-            else 1
+        t = TLog(inverted_path)
+        before = t.snapshot()
+        inverted_vacuum(spark, inverted_path)
+        inverted_compact(spark, inverted_path)
+        t.vacuum()
+        after = t.snapshot()
+        report["inverted_vacuum_applied"] = bool(
+            before.files_in([TLOG_TOMBS_TAG])
         )
-        if before > n_parts:
-            compact_layout(
-                spark,
-                root_dir,
-                partition_by=[part_col] if part_col else None,
+        nb = int(before.meta["n_buckets"])
+        for label, tags in (
+            ("postings", range(nb)),
+            ("doclens", [TLOG_DOCLENS_TAG]),
+        ):
+            report[f"{label}_files"] = {
+                "before": len(before.files_in(tags)),
+                "after": len(after.files_in(tags)),
+            }
+    if nsw_path is not None:
+        from cnc_visionsearch_spark.operators.graph_ann import (
+            TLOG_NSW_ENTRIES_TAG,
+            nsw_compact,
+        )
+
+        t = TLog(nsw_path)
+
+        def n_edge_files() -> int:
+            return sum(
+                1 for _p, b in t.snapshot().files if b != TLOG_NSW_ENTRIES_TAG
             )
-        report[f"{label}_files"] = {"before": before, "after": n_files(root_dir)}
+
+        before = n_edge_files()
+        nsw_compact(spark, nsw_path)
+        t.vacuum()
+        report["nsw_graph_files"] = {"before": before, "after": n_edge_files()}
     if state_dir is not None:
         root = os.path.join(state_dir, "id_mapping")
         before = n_files(root) if os.path.exists(root) else 0

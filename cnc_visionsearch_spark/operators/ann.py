@@ -659,7 +659,7 @@ def _vacuum_layout(
     partition swaps in crash-safely (live -> .bak, tmp -> live, drop
     .bak — a rmtree-then-rename order loses the partition forever if
     the process dies between the calls; same discipline as
-    :func:`_swap_artifact_dir` and text_index's vacuum) with
+    :func:`_swap_artifact_dir`) with
     self-heal-on-entry for leftovers of an earlier crash.
     ``drop_tombstones=False`` lets a caller vacuum SEVERAL tables with
     different partition columns against one tombstone set before

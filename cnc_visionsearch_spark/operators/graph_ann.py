@@ -8,12 +8,12 @@ HNSW is a pointer-chasing, single-process structure; it cannot hold a
 ideas — a bounded-degree kNN graph and greedy beam search — and maps
 each to a Spark-scale primitive:
 
-- **Graph = a bucket-partitioned parquet table.** One row per directed
+- **Graph = a bucket-tagged parquet table.** One row per directed
   edge ``(src, dst, dvec)`` with the destination vector DENORMALIZED
   into the edge row (HNSW equally stores vectors adjacent to the
-  adjacency lists) and partitioned by ``src_bucket = src % n_buckets``.
-  A hop therefore reads only the beam's buckets — partition pruning is
-  the distributed analog of following in-RAM pointers.
+  adjacency lists) and filed by ``src_bucket = src % n_buckets``.
+  A hop therefore reads only the beam's buckets — file pruning is the
+  distributed analog of following in-RAM pointers.
 - **Search = H beam-search hops, each ONE pruned scan.** The beam is a
   query-planner value (≤ ef rows, like the probe-cell list of the IVF
   tier), so per hop the driver prunes buckets, scans ≤ |beam| · m edge
@@ -27,6 +27,17 @@ the same sequential fold — so beam search replays exactly in SQL as
 unrolled CTEs and the registered query is hash-gated even though the
 search itself is approximate (recall gates live in
 tests/test_ann_graph.py).
+
+Storage: every graph is a sources/tlog table (a minimal Delta
+protocol). The build is ONE init commit whose edge files carry their
+src_bucket (HNSW: (layer, src_bucket)) as conflict-domain tag;
+appends are blind commits (never conflict, rebase on version races)
+and compaction is a rewrite commit declaring the touched domains —
+racing appends into other buckets serialize, overlapping ones
+conflict-and-recompute (run_transaction). NSW entry points carry a
+reserved tag; the HNSW entry rides commit META, so racing promotions
+serialize through the meta-rebase window. Readers replay ONE snapshot
+per search and prune at the log level.
 
 At 100 TB the build step generates candidate edges with the
 IVF-pruned batch join (``nsw_build(..., candidates="ivf")`` routes the
@@ -50,7 +61,7 @@ from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import l2_sq
 from cnc_visionsearch_spark.operators.ann import _metadata_rows, _seq_l2_sq
-from cnc_visionsearch_spark.operators.mutex import single_writer
+from cnc_visionsearch_spark.sources.tlog import TLog, run_transaction
 
 __all__ = [
     "nsw_build",
@@ -75,36 +86,17 @@ def _meta(path: str) -> dict:
         return json.load(fh)
 
 
-# ---- transactional (tlog) NSW layout mode (r10) --------------------------
-# The r9 scope exclusion "graph-ANN appends race compacts unarbitrated"
-# closes the same way the token-IVF/inverted/IVF artifacts did in r9:
-# `nsw_build(use_tlog=True)` lays the edge table down as ONE init
-# commit with per-edge-file src_bucket conflict domains, appends are
-# blind commits (never conflict, rebase on version races), and
-# `nsw_compact` is a rewrite commit declaring the touched bucket
-# domains — racing appends into other buckets serialize, overlapping
-# ones conflict-and-recompute (run_transaction). Entries carry a
-# reserved tag. Legacy tmp+rename layouts keep the operators/mutex.py
-# single-writer lock instead (single_writer skips tlog layouts).
-
 TLOG_NSW_ENTRIES_TAG = 300_000
 _GRAPH_SCHEMA = "src bigint, dst bigint, dvec array<double>, src_bucket int"
 # HNSW conflict-domain tag = layer * STRIDE + src_bucket (one int per
 # (layer, bucket) edge partition; n_buckets must stay < STRIDE — the
 # geometry sidecar's n_buckets is 16/1024 in every layout here). The
-# ENTRY is not a file at all in tlog mode: it rides commit META (a
-# read-modify-write key, so racing promotions serialize through the
-# meta-rebase window instead of racing a directory swap).
+# ENTRY is not a file at all: it rides commit META (a read-modify-write
+# key, so racing promotions serialize through the meta-rebase window).
 TLOG_HNSW_LAYER_STRIDE = 1024
 _HGRAPH_SCHEMA = (
     "layer int, src bigint, dst bigint, dvec array<double>, src_bucket int"
 )
-
-
-def _nsw_tlog(path: str):
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
-
-    return tlog_of(path)
 
 
 def _retag_g(adds: list, tag: int) -> list:
@@ -113,47 +105,44 @@ def _retag_g(adds: list, tag: int) -> list:
     return adds
 
 
-def _nsw_graph_reader(spark, path: str):
-    """One-per-search reader handle for the edge table: the legacy
-    relation (ONE spark.read.parquet — re-creating it per hop re-lists
-    files and re-infers schema, a measured multi-hop tax) or the tlog
-    snapshot (ONE log replay) is captured once; each call prunes to
-    ``buckets`` — partition pruning on legacy layouts, LOG-level file
-    pruning on transactional ones."""
-    t = _nsw_tlog(path)
-    if t is None:
-        g = spark.read.parquet(f"{path}/graph")
+def _memo_reader(spark, root: str, snap, schema: str):
+    """``read(tags)``: the lazy relation over the snapshot files tagged
+    ``tags``, memoized per live-file set (r11): a beam search's hops
+    mostly revisit the same bucket set, and each spark.read.parquet
+    re-lists and re-plans the same files (~20-40 ms of per-hop driver
+    tax); the snapshot is frozen for the life of the reader, so caching
+    the relation per resolved path tuple is pure reuse."""
+    memo: dict[tuple, DataFrame] = {}
 
-        def read(buckets=None):
-            if buckets is None:
-                return g
-            return g.filter(F.col("src_bucket").isin(sorted(buckets)))
-
-        return read
-    snap = t.snapshot()
-    n_buckets = int(_meta(path)["n_buckets"])
-    # relation memo per live-file set (r11): a beam search's hops
-    # mostly revisit the same bucket set, and each spark.read.parquet
-    # re-lists and re-plans the same files (~20-40 ms of per-hop driver
-    # tax); the snapshot is frozen for the life of this handle, so
-    # caching the lazy relation per resolved path tuple is pure reuse
-    _rel_memo: dict[tuple, DataFrame] = {}
-
-    def read(buckets=None):
-        tags = set(
-            sorted(buckets) if buckets is not None else range(n_buckets)
-        )
+    def read(tags: set) -> DataFrame:
         paths = tuple(p for p, b in snap.files if b in tags)
-        rel = _rel_memo.get(paths)
+        rel = memo.get(paths)
         if rel is None:
             if not paths:
-                rel = spark.createDataFrame([], _GRAPH_SCHEMA)
+                rel = spark.createDataFrame([], schema)
             else:
-                rel = spark.read.schema(_GRAPH_SCHEMA).parquet(
-                    *[os.path.join(t.root, p) for p in paths]
+                rel = spark.read.schema(schema).parquet(
+                    *[os.path.join(root, p) for p in paths]
                 )
-            _rel_memo[paths] = rel
+            memo[paths] = rel
         return rel
+
+    return read
+
+
+def _nsw_graph_reader(spark, path: str, snap=None):
+    """One-per-search reader handle for the edge table: ONE snapshot
+    (default: the latest) is captured; each call prunes to ``buckets``
+    at the LOG level."""
+    if snap is None:
+        snap = TLog(path).snapshot()
+    n_buckets = int(_meta(path)["n_buckets"])
+    read_tags = _memo_reader(spark, path, snap, _GRAPH_SCHEMA)
+
+    def read(buckets=None):
+        return read_tags(
+            set(buckets) if buckets is not None else set(range(n_buckets))
+        )
 
     return read
 
@@ -162,21 +151,18 @@ def read_nsw_graph(spark, path: str, buckets=None) -> DataFrame:
     """The sanctioned one-shot reader for the layout's denormalized
     edge table (see :func:`_nsw_graph_reader`; loops should take a
     reader handle instead of calling this per hop). The src_bucket
-    column is real data in both modes, so downstream filters are
-    mode-invariant."""
+    column is real data, so downstream filters can use it."""
     return _nsw_graph_reader(spark, path)(buckets)
 
 
-def _entry_rows(path: str) -> list[dict]:
+def _entry_rows(path: str, snap=None) -> list[dict]:
     """Driver-side entry-point rows (metadata-sized, like the IVF
-    codebook) across both layout modes."""
-    t = _nsw_tlog(path)
-    if t is None:
-        return _metadata_rows(f"{path}/entries")
-    snap = t.snapshot()
+    codebook) of ``snap`` (default: the latest)."""
+    if snap is None:
+        snap = TLog(path).snapshot()
     rows: list[dict] = []
     for rel in snap.files_in([TLOG_NSW_ENTRIES_TAG]):
-        rows.extend(_metadata_rows(os.path.join(t.root, rel)))
+        rows.extend(_metadata_rows(os.path.join(path, rel)))
     return rows
 
 
@@ -205,66 +191,40 @@ def _compact_tlog_graph(spark, t, tag_pred, schema, bucket_expr) -> None:
 
 
 def nsw_compact(spark, path: str) -> None:
-    """Compact a TRANSACTIONAL NSW layout: rewrite every bucket holding
-    more than one live edge file into one file, as ONE rewrite commit
-    declaring the touched bucket domains — the append-accretion bound
-    (St5) for the graph tier, now arbitrated: a racing append into an
-    untouched bucket serializes; into a touched one, this commit
-    conflicts and the caller's run_transaction recomputes. Probe
-    results are unchanged by construction (same rows, fewer files)."""
-    t = _nsw_tlog(path)
-    if t is None:
-        raise ValueError(
-            f"nsw_compact requires a transactional layout (nsw_build("
-            f"use_tlog=True)); {path} is a legacy tmp+rename layout"
-        )
+    """Compact an NSW layout: rewrite every bucket holding more than
+    one live edge file into one file, as ONE rewrite commit declaring
+    the touched bucket domains — the append-accretion bound (St5) for
+    the graph tier, arbitrated: a racing append into an untouched
+    bucket serializes; into a touched one, this commit conflicts and
+    the caller's run_transaction recomputes. Probe results are
+    unchanged by construction (same rows, fewer files)."""
     n_buckets = int(_meta(path)["n_buckets"])
     _compact_tlog_graph(
-        spark, t, lambda b: b < n_buckets, _GRAPH_SCHEMA, F.col("src_bucket")
+        spark,
+        TLog(path),
+        lambda b: b < n_buckets,
+        _GRAPH_SCHEMA,
+        F.col("src_bucket"),
     )
 
 
-def _hnsw_graph_reader(spark, path: str):
+def _hnsw_graph_reader(spark, path: str, snap=None):
     """One-per-search reader handle for the layered edge table (the
-    :func:`_nsw_graph_reader` doctrine): legacy relation or tlog
-    snapshot captured ONCE, each call prunes to (layer, buckets) —
-    partition filters on legacy layouts, (layer, bucket) tag -> live
-    file pruning on transactional ones, same row filters either way."""
-    t = _nsw_tlog(path)
-    if t is None:
-        g0 = spark.read.parquet(f"{path}/graph")
-
-        def read(layer=None, buckets=None):
-            g = g0
-            if layer is not None:
-                g = g.filter(F.col("layer") == int(layer))
-            if buckets is not None:
-                g = g.filter(F.col("src_bucket").isin(sorted(buckets)))
-            return g
-
-        return read
+    :func:`_nsw_graph_reader` doctrine): ONE snapshot captured, each
+    call prunes to (layer, buckets) through the (layer, bucket) tag ->
+    live file selection."""
     meta = _hnsw_meta(path)
     nb, ml = int(meta["n_buckets"]), int(meta["max_level"])
-    snap = t.snapshot()
-    # relation memo per live-file set (see _nsw_graph_reader): layer-0
-    # beam hops repeatedly resolve the same (layer, bucket-set) tags —
-    # reuse the lazy relation instead of re-reading the same files
-    _rel_memo: dict[tuple, DataFrame] = {}
+    if snap is None:
+        snap = TLog(path).snapshot()
+    read_tags = _memo_reader(spark, path, snap, _HGRAPH_SCHEMA)
 
     def read(layer=None, buckets=None):
         layers = [int(layer)] if layer is not None else list(range(ml + 1))
         bks = sorted(buckets) if buckets is not None else list(range(nb))
-        tags = {l * TLOG_HNSW_LAYER_STRIDE + b for l in layers for b in bks}
-        paths = tuple(p for p, b in snap.files if b in tags)
-        g = _rel_memo.get(paths)
-        if g is None:
-            if not paths:
-                g = spark.createDataFrame([], _HGRAPH_SCHEMA)
-            else:
-                g = spark.read.schema(_HGRAPH_SCHEMA).parquet(
-                    *[os.path.join(t.root, p) for p in paths]
-                )
-            _rel_memo[paths] = g
+        g = read_tags(
+            {l * TLOG_HNSW_LAYER_STRIDE + b for l in layers for b in bks}
+        )
         if layer is not None:
             g = g.filter(F.col("layer") == int(layer))
         if buckets is not None:
@@ -282,23 +242,11 @@ def read_hnsw_graph(
     return _hnsw_graph_reader(spark, path)(layer, buckets)
 
 
-def _hnsw_entry(spark, path: str) -> dict:
-    """The search entry point across both modes: legacy layouts read
-    the (healed) entry artifact dir; transactional layouts carry the
-    entry in commit META — promotion is a meta-key commit, so racing
-    promotions serialize instead of racing a directory swap."""
-    t = _nsw_tlog(path)
-    if t is None:
-        from cnc_visionsearch_spark.operators.ann import _heal_artifact_dir
-
-        _heal_artifact_dir(f"{path}/entry")  # crashed promotion swap
-        e = spark.read.parquet(f"{path}/entry").first()
-        return {
-            "vec_id": int(e["vec_id"]),
-            "nvec": [float(x) for x in e["nvec"]],
-            "level": int(e["level"]),
-        }
-    m = t.snapshot().meta["entry"]
+def _hnsw_entry(snap) -> dict:
+    """The search entry point: it rides commit META — promotion is a
+    meta-key commit, so racing promotions serialize instead of racing
+    a directory swap."""
+    m = snap.meta["entry"]
     return {
         "vec_id": int(m["vec_id"]),
         "nvec": [float(x) for x in m["nvec"]],
@@ -315,14 +263,8 @@ def _hnsw_tag_expr():
 def hnsw_compact(spark, path: str) -> None:
     """:func:`nsw_compact` for the layered layout — one rewrite commit
     over every (layer, bucket) domain holding more than one live file."""
-    t = _nsw_tlog(path)
-    if t is None:
-        raise ValueError(
-            f"hnsw_compact requires a transactional layout (hnsw_build("
-            f"use_tlog=True)); {path} is a legacy tmp+rename layout"
-        )
     _compact_tlog_graph(
-        spark, t, lambda b: True, _HGRAPH_SCHEMA, _hnsw_tag_expr()
+        spark, TLog(path), lambda b: True, _HGRAPH_SCHEMA, _hnsw_tag_expr()
     )
 
 
@@ -411,22 +353,34 @@ def nsw_build(
     ivf_path: str | None = None,
     ivf_cells: int = 8,
     ivf_nprobe: int = 4,
-    use_tlog: bool = False,
 ) -> None:
     """Materialize the NSW layout at ``path``: the per-src top-``m``
     neighbor graph (candidate set per ``candidates`` — see
     :func:`nsw_candidate_edges`; "exact" is the fixture-scale oracle-
     parity mode, "ivf" the 100 TB IVF-pruned mode), destination
-    vectors denormalized into edge rows, partitioned by
-    ``src % n_buckets``; plus ``{path}/entries`` — the ``n_entries``
-    smallest ids with their vectors, the fixed search entry points
-    (metadata-sized, read driver-side like the IVF codebook).
+    vectors denormalized into edge rows, one file per
+    ``src % n_buckets`` bucket; plus the ``n_entries`` smallest ids
+    with their vectors, the fixed search entry points (metadata-sized,
+    read driver-side like the IVF codebook) — both as ONE atomic init
+    commit (refuses a non-empty log).
 
     In ivf mode, ``ivf_path`` reuses an existing
     :func:`~cnc_visionsearch_spark.operators.ann.ivf_build` layout
     (the production shape: the corpus already has one); when omitted a
     transient ``ivf_cells``-cell layout is built under ``path`` and
     removed after the graph is written."""
+    if n_buckets >= TLOG_NSW_ENTRIES_TAG:
+        raise ValueError(
+            f"nsw_build: n_buckets={n_buckets} would collide with the "
+            f"reserved entries conflict-domain tag "
+            f"({TLOG_NSW_ENTRIES_TAG}); keep n_buckets below it"
+        )
+    t = TLog(path)
+    if t.latest_version() != 0:
+        raise ValueError(
+            f"nsw_build: tlog layout {path} already holds "
+            f"{t.latest_version()} commit(s); wipe to rebuild"
+        )
     transient_ivf = None
     if candidates == "ivf" and ivf_path is None:
         from cnc_visionsearch_spark.operators.ann import ivf_build
@@ -445,8 +399,8 @@ def nsw_build(
         "src",
         "dst",
         "dvec",
-        # int, matching nsw_append's edge schema — tlog-mode data files
-        # must agree byte-for-byte on the column type across commits
+        # int, matching nsw_append's edge schema — data files must
+        # agree on the column type across commits
         F.pmod(F.col("src"), F.lit(n_buckets)).cast("int").alias("src_bucket"),
     )
     entries = (
@@ -455,51 +409,8 @@ def nsw_build(
         .limit(n_entries)
         .coalesce(1)
     )
-    if use_tlog:
-        # TRANSACTIONAL layout: graph + entries as ONE atomic init
-        # commit (the r9 artifact-tlog doctrine applied to the graph
-        # tier); every later mutation is a commit with src_bucket
-        # conflict domains
-        from cnc_visionsearch_spark.sources.tlog import TLog
-
-        if n_buckets >= TLOG_NSW_ENTRIES_TAG:
-            raise ValueError(
-                f"nsw_build(use_tlog=True): n_buckets={n_buckets} would "
-                f"collide with the reserved entries conflict-domain tag "
-                f"({TLOG_NSW_ENTRIES_TAG}); keep n_buckets below it"
-            )
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"nsw_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        adds = t.write_data(graph, bucket_expr=F.col("src_bucket"))
-        adds += _retag_g(t.write_data(entries), TLOG_NSW_ENTRIES_TAG)
-        t.commit(
-            adds=adds,
-            op="append",
-            meta={"kind": "nsw", "m": m, "n_buckets": n_buckets},
-            base_version=0,
-        )
-    else:
-        # ONE file per bucket (r12, guide §6 small files): the raw
-        # partitionBy write fragments each bucket across every writer
-        # task (~10 files/bucket at bench sf — 160 files for 16
-        # buckets), and every beam hop re-opens all of them. Keyed
-        # repartition before the write collapses the layout to one
-        # file per bucket — exactly what the tlog write_data path and
-        # the r8 copurchase-edges build already do. Measured
-        # interleaved (same session, per-layout twin artifacts,
-        # identical search results asserted): nsw_search min
-        # 0.93s -> 0.65s, every block faster.
-        (
-            graph.repartition(F.col("src_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("src_bucket")
-            .parquet(f"{path}/graph")
-        )
-        entries.write.mode("overwrite").parquet(f"{path}/entries")
+    adds = t.write_data(graph, bucket_expr=F.col("src_bucket"))
+    adds += _retag_g(t.write_data(entries), TLOG_NSW_ENTRIES_TAG)
     if transient_ivf is not None:
         import shutil
 
@@ -508,22 +419,28 @@ def nsw_build(
         json.dump(
             {"m": m, "n_buckets": n_buckets, "n_entries": n_entries}, fh
         )
+    # the init commit comes LAST, so a committed layout always has its
+    # sidecar: version > 0 is the "built" marker
+    t.commit(
+        adds=adds,
+        op="append",
+        meta={"kind": "nsw", "m": m, "n_buckets": n_buckets},
+        base_version=0,
+    )
 
 
-@single_writer("nsw_append")
 def nsw_append(spark, path: str, new_emb: DataFrame) -> None:
     """Incremental insert — the batch twin of HNSW's online ``add``:
     each new node gets out-edges to its m nearest EXISTING nodes (found
     by :func:`nsw_search_df`, i.e. through the index itself, exactly how
     HNSW inserts) plus BACK-edges from those neighbors, so new nodes
-    are reachable by later searches. Both edge sets append into the
-    bucket-partitioned layout — existing files stay byte-identical; a
+    are reachable by later searches. Both edge sets land as ONE blind
+    append commit (src_bucket-tagged adds — never blocked by a racing
+    :func:`nsw_compact`; an overlapping compact conflicts and
+    recomputes instead) — existing files stay byte-identical; a
     touched src may temporarily exceed degree m (search correctness
     only widens; periodic :func:`nsw_build` re-trims). O(batch), never
-    a corpus rescan. On a TRANSACTIONAL layout the edges land as ONE
-    blind append commit (src_bucket-tagged adds — never blocked by a
-    racing :func:`nsw_compact`; an overlapping compact conflicts and
-    recomputes instead)."""
+    a corpus rescan."""
     meta = _meta(path)
     m, n_buckets = meta["m"], meta["n_buckets"]
     new_rows = new_emb.select("vec_id", "nvec").collect()
@@ -555,16 +472,10 @@ def nsw_append(spark, path: str, new_emb: DataFrame) -> None:
         if dst in nbr_vec
     ] + [(src, dst, dvec, src % n_buckets) for src, dst, dvec in back]
     df = spark.createDataFrame(rows, _GRAPH_SCHEMA)
-    t = _nsw_tlog(path)
-    if t is not None:
-        t.commit(
-            adds=t.write_data(df, bucket_expr=F.col("src_bucket")),
-            op="append",
-        )
-    else:
-        df.write.mode("append").partitionBy("src_bucket").parquet(
-            f"{path}/graph"
-        )
+    t = TLog(path)
+    t.commit(
+        adds=t.write_data(df, bucket_expr=F.col("src_bucket")), op="append"
+    )
 
 
 def nsw_search(
@@ -584,9 +495,10 @@ def nsw_search(
     meta = _meta(path)
     n_buckets = meta["n_buckets"]
     q = [float(x) for x in query_vec]
+    snap = TLog(path).snapshot()  # ONE snapshot per search
     beam: dict[int, float] = {
         int(r["vec_id"]): _seq_l2_sq(r["nvec"], q)
-        for r in _entry_rows(path)
+        for r in _entry_rows(path, snap)
     }
     beam = dict(sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
     qcol = F.array(*[F.lit(x) for x in q]).cast("array<double>")
@@ -597,7 +509,7 @@ def nsw_search(
     # expression instead of a per-literal isin build (internal bigint
     # ids, not user input)
     score = l2_sq("dvec", qcol).alias("d")
-    read = _nsw_graph_reader(spark, path)  # ONE relation/snapshot per search
+    read = _nsw_graph_reader(spark, path, snap)
     for _ in range(hops):
         ids = sorted(beam)
         if not ids:
@@ -697,14 +609,41 @@ def hnsw_build(
     candidates: str = "exact",
     ivf_path: str | None = None,
     ivf_nprobe: int = 4,
-    use_tlog: bool = False,
+    *,
+    use_tlog: bool = True,
 ) -> None:
-    """Materialize the hierarchical layout at ``path``:
-    ``{path}/graph`` partitioned by ``(layer, src_bucket)`` — layer 0
-    is the full top-``m`` graph (the flat NSW tier's table), layer
-    l >= 1 the top-``m_upper`` graph over nodes of level >= l — plus
-    ``{path}/entry`` (the max-level node, ties to min id: the fixed
-    search entry, metadata-sized) and ``_HNSW.json``."""
+    """Materialize the hierarchical layout at ``path``: the layered
+    edge table filed by ``(layer, src_bucket)`` — layer 0 is the full
+    top-``m`` graph (the flat NSW tier's table), layer l >= 1 the
+    top-``m_upper`` graph over nodes of level >= l — as ONE atomic init
+    commit whose meta carries the entry (the max-level node, ties to
+    min id: the fixed search entry), plus ``_HNSW.json``. Refuses a
+    non-empty log.
+
+    ``use_tlog`` accepts only True: the transaction log is the only
+    layout."""
+    if not use_tlog:
+        raise ValueError(
+            "hnsw_build: the legacy directory layout was removed; the "
+            "transaction-log layout is the only one"
+        )
+    if n_buckets >= TLOG_HNSW_LAYER_STRIDE:
+        # the (layer, bucket) conflict-domain tag is layer * STRIDE +
+        # bucket — a wider bucket count would silently alias tags
+        # ACROSS layers, corrupting log-level pruning and append/compact
+        # conflict domains
+        raise ValueError(
+            f"hnsw_build: n_buckets={n_buckets} must stay below "
+            f"TLOG_HNSW_LAYER_STRIDE ({TLOG_HNSW_LAYER_STRIDE}) — larger "
+            "values alias (layer, bucket) conflict-domain tags across "
+            "layers"
+        )
+    t = TLog(path)
+    if t.latest_version() != 0:
+        raise ValueError(
+            f"hnsw_build: tlog layout {path} already holds "
+            f"{t.latest_version()} commit(s); wipe to rebuild"
+        )
     levels = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("nvec"),
@@ -733,63 +672,12 @@ def hnsw_build(
     graph = layers[0]
     for g in layers[1:]:
         graph = graph.unionByName(g)
-    if use_tlog:
-        from cnc_visionsearch_spark.sources.tlog import TLog
-
-        if n_buckets >= TLOG_HNSW_LAYER_STRIDE:
-            # the (layer, bucket) conflict-domain tag is
-            # layer * STRIDE + bucket — a wider bucket count would
-            # silently alias tags ACROSS layers, corrupting log-level
-            # pruning and append/compact conflict domains (r10 advice:
-            # the documented invariant is now validated, not prose)
-            raise ValueError(
-                f"hnsw_build(use_tlog=True): n_buckets={n_buckets} must "
-                f"stay below TLOG_HNSW_LAYER_STRIDE "
-                f"({TLOG_HNSW_LAYER_STRIDE}) — larger values alias "
-                "(layer, bucket) conflict-domain tags across layers"
-            )
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"hnsw_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        e = (
-            levels.orderBy(F.col("level").desc(), F.col("vec_id").asc())
-            .limit(1)
-            .first()
-        )
-        t.commit(
-            adds=t.write_data(graph, bucket_expr=_hnsw_tag_expr()),
-            op="append",
-            meta={
-                "kind": "hnsw",
-                "m": m,
-                "m_upper": m_upper,
-                "n_buckets": n_buckets,
-                "entry": {
-                    "vec_id": int(e["vec_id"]),
-                    "nvec": [float(x) for x in e["nvec"]],
-                    "level": int(e["level"]),
-                },
-            },
-            base_version=0,
-        )
-    else:
-        # one file per (layer, bucket) — see nsw_build (r12, guide §6):
-        # measured hnsw_search min 1.20s -> 0.89s on the compacted twin
-        graph.repartition(
-            F.col("layer"), F.col("src_bucket")
-        ).write.mode("overwrite").partitionBy(
-            "layer", "src_bucket"
-        ).parquet(f"{path}/graph")
-        (
-            levels.orderBy(F.col("level").desc(), F.col("vec_id").asc())
-            .limit(1)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/entry")
-        )
+    e = (
+        levels.orderBy(F.col("level").desc(), F.col("vec_id").asc())
+        .limit(1)
+        .first()
+    )
+    adds = t.write_data(graph, bucket_expr=_hnsw_tag_expr())
     with open(os.path.join(path, "_HNSW.json"), "w") as fh:
         json.dump(
             {
@@ -801,6 +689,24 @@ def hnsw_build(
             },
             fh,
         )
+    # the init commit comes LAST (see nsw_build): version > 0 is the
+    # "built" marker
+    t.commit(
+        adds=adds,
+        op="append",
+        meta={
+            "kind": "hnsw",
+            "m": m,
+            "m_upper": m_upper,
+            "n_buckets": n_buckets,
+            "entry": {
+                "vec_id": int(e["vec_id"]),
+                "nvec": [float(x) for x in e["nvec"]],
+                "level": int(e["level"]),
+            },
+        },
+        base_version=0,
+    )
 
 
 def _hnsw_meta(path: str) -> dict:
@@ -820,35 +726,21 @@ def _hnsw_meta(path: str) -> dict:
 # distances in one beam). Above the bound — upper layers are a corpus
 # fraction (level_mult^-l) at 100 TB — the per-hop bucket-pruned scans
 # remain, so the pruning story is intact by construction.
-HNSW_UPPER_COLLECT_MAX_BYTES = int(
-    os.environ.get("HNSW_UPPER_COLLECT_MAX_BYTES", str(32 << 20))
-)
+HNSW_UPPER_COLLECT_MAX_BYTES = 32 << 20
 
 
-def _hnsw_upper_bytes(path: str):
-    """Total live bytes of layers >= 1, from the file layout only (no
-    Spark job); None when unknowable (assume big — keep per-hop scans)."""
-    t = _nsw_tlog(path)
+def _hnsw_upper_bytes(path: str, snap):
+    """Total live bytes of layers >= 1, from the snapshot's file list
+    only (no Spark job); None when unknowable (assume big — keep
+    per-hop scans)."""
     total = 0
     try:
-        if t is None:
-            base = os.path.join(path, "graph")
-            for name in os.listdir(base):
-                if not name.startswith("layer="):
-                    continue
-                try:
-                    if int(name.split("=", 1)[1]) < 1:
-                        continue
-                except ValueError:
-                    return None
-                for root, _dirs, files in os.walk(os.path.join(base, name)):
+        for p, b in snap.files:
+            if b is not None and b >= TLOG_HNSW_LAYER_STRIDE:
+                for root, _dirs, files in os.walk(os.path.join(path, p)):
                     for f in files:
                         if not f.startswith((".", "_")):
                             total += os.stat(os.path.join(root, f)).st_size
-            return total
-        for p, b in t.snapshot().files:
-            if b is not None and b >= TLOG_HNSW_LAYER_STRIDE:
-                total += os.stat(os.path.join(t.root, p)).st_size
         return total
     except OSError:
         return None
@@ -893,18 +785,19 @@ def hnsw_search(
     meta = _hnsw_meta(path)
     n_buckets, max_level = meta["n_buckets"], meta["max_level"]
     q = [float(x) for x in query_vec]
-    e = _hnsw_entry(spark, path)
+    snap = TLog(path).snapshot()  # ONE snapshot per search
+    e = _hnsw_entry(snap)
     cur_id, cur_d = int(e["vec_id"]), _seq_l2_sq(e["nvec"], q)
     qcol = F.array(*[F.lit(x) for x in q]).cast("array<double>")
     # hoisted per-search score Column — see nsw_search (r11)
     score = l2_sq("dvec", qcol).alias("d")
-    read = _hnsw_graph_reader(spark, path)  # ONE relation/snapshot per search
+    read = _hnsw_graph_reader(spark, path, snap)
     # layers above the entry's level are empty by construction (the
     # entry IS a max-level node) — skip their no-op scans
     start_layer = min(max_level, int(e["level"]))
     upper_adj = None
     if start_layer >= 1:
-        ub = _hnsw_upper_bytes(path)
+        ub = _hnsw_upper_bytes(path, snap)
         if ub is not None and ub <= HNSW_UPPER_COLLECT_MAX_BYTES:
             # batched descent (r12): ONE pruned collect of layers >= 1
             # replaces up to start_layer x upper_hops per-hop jobs;
@@ -1010,7 +903,6 @@ def _hnsw_beam_layer(
     return beam
 
 
-@single_writer("hnsw_append")
 def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
     """Incremental insert into a :func:`hnsw_build` layout — the exact
     HNSW insert algorithm, batched: each new node draws its
@@ -1028,8 +920,10 @@ def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
     n_buckets, max_level = meta["n_buckets"], meta["max_level"]
     level_mult = meta["level_mult"]
 
-    read_fn = _hnsw_graph_reader(spark, path)  # ONE relation/snapshot
-    entry = _hnsw_entry(spark, path)
+    t = TLog(path)
+    snap = t.snapshot()
+    read_fn = _hnsw_graph_reader(spark, path, snap)  # ONE snapshot
+    entry = _hnsw_entry(snap)
     new_rows = new_emb.select(
         "vec_id",
         "nvec",
@@ -1094,53 +988,26 @@ def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
         for layer, src, dst, dvec in back_edges
     ]
     df = spark.createDataFrame(rows, _HGRAPH_SCHEMA)
-    t = _nsw_tlog(path)
-    if t is not None:
-        # edges land as ONE blind append commit (never blocked by a
-        # racing compact), THEN the entry promotion as a meta-key
-        # commit: racing promotions serialize through the meta-rebase
-        # window (base_version), and the loser re-reads and promotes
-        # only if it still wins (level desc, vec_id asc) — the
-        # read-modify-write the legacy directory swap could not
-        # arbitrate. Edge-before-entry order keeps every search seeded
-        # at a node whose out-edges are already visible.
-        t.commit(
-            adds=t.write_data(df, bucket_expr=_hnsw_tag_expr()), op="append"
-        )
-        if new_entry is not None:
-            from cnc_visionsearch_spark.sources.tlog import run_transaction
+    # edges land as ONE blind append commit (never blocked by a racing
+    # compact), THEN the entry promotion as a meta-key commit: racing
+    # promotions serialize through the meta-rebase window
+    # (base_version), and the loser re-reads and promotes only if it
+    # still wins (level desc, vec_id asc). Edge-before-entry order
+    # keeps every search seeded at a node whose out-edges are already
+    # visible.
+    t.commit(adds=t.write_data(df, bucket_expr=_hnsw_tag_expr()), op="append")
+    if new_entry is None:
+        return
+    vid, nvec, lvl = new_entry
 
-            vid, nvec, lvl = new_entry
-
-            def promote():
-                snap = t.snapshot()
-                cur = snap.meta["entry"]
-                if (lvl, -vid) > (int(cur["level"]), -int(cur["vec_id"])):
-                    t.commit(
-                        op="append",
-                        meta={
-                            "entry": {
-                                "vec_id": vid,
-                                "nvec": nvec,
-                                "level": lvl,
-                            }
-                        },
-                        base_version=snap.version,
-                    )
-
-            run_transaction(promote)
-    else:
-        df.write.mode("append").partitionBy("layer", "src_bucket").parquet(
-            f"{path}/graph"
-        )
-        if new_entry is not None:
-            vid, nvec, lvl = new_entry
-            spark.createDataFrame(
-                [(vid, nvec, lvl)],
-                "vec_id bigint, nvec array<double>, level int",
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/entry.tmp")
-            from cnc_visionsearch_spark.operators.ann import (
-                _swap_artifact_dir,
+    def promote():
+        snap = t.snapshot()
+        cur = snap.meta["entry"]
+        if (lvl, -vid) > (int(cur["level"]), -int(cur["vec_id"])):
+            t.commit(
+                op="append",
+                meta={"entry": {"vec_id": vid, "nvec": nvec, "level": lvl}},
+                base_version=snap.version,
             )
 
-            _swap_artifact_dir(f"{path}/entry")
+    run_transaction(promote)

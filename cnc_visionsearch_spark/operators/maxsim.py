@@ -19,6 +19,12 @@ this module holds the pieces every maxsim tier shares:
   the streaming serving twin both call, so online and batch rankings
   cannot drift.
 
+Storage: the token-IVF layout is a sources/tlog table (a minimal
+Delta protocol) — centroids, the token->cell table and the
+(cell_id, doc_id) rows land as ONE init commit with the geometry in
+commit meta; appends and tombstone deletes are blind commits,
+vacuums rewrite commits declaring the cell domains they read.
+
 Determinism contract (the oracle replays every step): centroids are
 the first n_cells vocabulary tokens ordered by (md5(tok), tok) — the
 stride-centroid doctrine of operators/ann.ivf_centroids adapted to a
@@ -182,47 +188,41 @@ TLOG_TIVF_TOKENS_TAG = 200_001
 TLOG_TIVF_TOMBS_TAG = 200_002
 
 
-def _tivf_tlog(path: str):
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
-
-    return tlog_of(path)
-
-
 def _retag(adds: list[dict], tag: int) -> list[dict]:
     for a in adds:
         a["bucket"] = tag
     return adds
 
 
-def _tlog_read_tags(spark, t, snap, tags):
+_DOC_CELLS_SCHEMA = "cell_id int, doc_id bigint"
+
+
+def _tlog_read_tags(spark, t, snap, tags, schema: str | None = None):
+    """DataFrame over the snapshot files tagged ``tags``; None when
+    there are none and no ``schema`` is given, else a typed empty
+    frame."""
     paths = snap.files_in(tags)
     if not paths:
-        return None
+        return None if schema is None else spark.createDataFrame([], schema)
     return spark.read.parquet(*[os.path.join(t.root, p) for p in paths])
 
 
 def read_doc_cells(spark: SparkSession, path: str, cells=None) -> DataFrame:
     """The sanctioned reader for the layout's (cell_id, doc_id) table —
     applies the tombstone filter (deleted docs vanish from candidates
-    immediately; the ANN tiers' read-through-the-filter doctrine) and
-    dispatches on the layout mode. ``cells`` prunes at the LOG level
-    on transactional layouts; legacy layouts keep the caller's
-    partition-pruning cell_id filter."""
-    t = _tivf_tlog(path)
-    if t is None:
-        dc = spark.read.parquet(os.path.join(path, "doc_cells"))
-        tdir = os.path.join(path, "tombstones")
-        if os.path.exists(tdir):
-            tombs = spark.read.parquet(tdir).select("doc_id").distinct()
-            dc = dc.join(F.broadcast(tombs), "doc_id", "left_anti")
-        return dc
+    immediately; the ANN tiers' read-through-the-filter doctrine).
+    ``cells`` prunes at the LOG level: only those cells' files enter
+    the scan."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    t = TLog(path)
     snap = t.snapshot()
     tags = (
         sorted(cells)
         if cells is not None
         else list(range(int(snap.meta["n_cells"])))
     )
-    dc = _tlog_read_tags(spark, t, snap, tags)
+    dc = _tlog_read_tags(spark, t, snap, tags, _DOC_CELLS_SCHEMA)
     tf = _tlog_read_tags(spark, t, snap, [TLOG_TIVF_TOMBS_TAG])
     if tf is not None:
         dc = dc.join(
@@ -238,28 +238,23 @@ def token_ivf_delete(spark: SparkSession, path: str, doc_ids: list[int]) -> None
     anti-join so deleted docs vanish from maxsim candidates
     immediately; resident files stay byte-identical; physical removal
     rides :func:`token_ivf_vacuum`."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
     df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
-    t = _tivf_tlog(path)
-    if t is None:
-        df.write.mode("append").parquet(os.path.join(path, "tombstones"))
-        return
+    t = TLog(path)
     t.commit(adds=_retag(t.write_data(df), TLOG_TIVF_TOMBS_TAG), op="append")
 
 
 def token_ivf_vacuum(spark: SparkSession, path: str) -> None:
     """Apply accumulated tombstones physically: rewrite ONLY the
-    doc_cells partitions holding deleted docs, then retire the
-    tombstone set. Legacy layouts use the shared crash-safe partition
-    swap (operators/ann._vacuum_layout); transactional layouts commit
-    ONE rewrite declaring the touched cell domains + the tombstone tag
-    — racing appends into other cells serialize, overlapping ones
-    conflict and the vacuum recomputes (run_transaction)."""
-    t = _tivf_tlog(path)
-    if t is None:
-        from cnc_visionsearch_spark.operators.ann import _vacuum_layout
+    doc_cells files holding deleted docs, then retire the tombstone
+    set, as ONE rewrite commit declaring the touched cell domains + the
+    tombstone tag — racing appends into other cells serialize,
+    overlapping ones conflict and the vacuum recomputes
+    (run_transaction)."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
-        _vacuum_layout(spark, path, ("doc_cells",), "cell_id", "doc_id")
-        return
+    t = TLog(path)
     snap = t.snapshot()
     tomb_files = snap.files_in([TLOG_TIVF_TOMBS_TAG])
     if not tomb_files:
@@ -461,21 +456,23 @@ def token_ivf_build(
     docs: DataFrame,
     path: str,
     n_cells: int = TOKEN_IVF_CELLS,
-    use_tlog: bool = False,
 ) -> None:
     """Build the token-vector IVF layout under ``path``:
 
-    - ``centroids/``: n_cells rows (cell_id, ctok, cv) — the first
+    - centroids: n_cells rows (cell_id, ctok, cv) — the first
       n_cells vocabulary tokens by (md5(tok), tok), their normalized
       vectors as centroids (deterministic stand-in for a trained
       codebook, the ivf_centroids doctrine — querying is identical,
       only centroid quality differs);
-    - ``token_cells/``: every vocabulary token's nearest cell
+    - token cells: every vocabulary token's nearest cell
       (tie-break cell_id) — O(vocab) rows;
-    - ``doc_cells/``: DISTINCT (cell_id, doc_id), PARTITIONED BY
-      cell_id — probe-time cell pruning is parquet partition pruning,
-      and at 100 TB this table is <= n_cells rows per doc while the
-      corpus text is never touched by a probe.
+    - doc cells: DISTINCT (cell_id, doc_id), one file per cell
+      tagged with its cell_id — probe-time cell pruning is log-level
+      file pruning, and at 100 TB this table is <= n_cells rows per doc
+      while the corpus text is never touched by a probe.
+
+    All three land as ONE atomic init commit (every later mutation is
+    a commit with cell-id conflict domains); refuses a non-empty log.
 
     Vocabulary extraction is one distinct over exploded tokens
     (vocab << corpus); assignment is a broadcast of the n_cells
@@ -498,64 +495,26 @@ def token_ivf_build(
         "cell_id int, ctok string, cv array<double>",
     )
     asg = _assign_tokens(vocab, cents)
-    os.makedirs(path, exist_ok=True)
-    if use_tlog:
-        # TRANSACTIONAL layout: centroids + token_cells + doc_cells as
-        # ONE atomic init commit (the artifact-tlog doctrine; every
-        # later mutation is a commit with cell-id conflict domains)
-        from cnc_visionsearch_spark.sources.tlog import TLog
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"token_ivf_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        adds = _retag(
-            t.write_data(cents.coalesce(1)), TLOG_TIVF_CENTROIDS_TAG
+    t = TLog(path)
+    if t.latest_version() != 0:
+        raise ValueError(
+            f"token_ivf_build: tlog layout {path} already holds "
+            f"{t.latest_version()} commit(s); wipe to rebuild"
         )
-        asg_written = t.write_data(asg)
-        asg_df = spark.read.parquet(
-            *[os.path.join(path, a["path"]) for a in asg_written]
-        )
-        adds += _retag(asg_written, TLOG_TIVF_TOKENS_TAG)
-        doc_cells = (
-            toks.join(F.broadcast(asg_df), "tok")
-            .select("cell_id", "doc_id")
-            .distinct()
-        )
-        adds += t.write_data(doc_cells, bucket_expr=F.col("cell_id"))
-        t.commit(
-            adds=adds,
-            op="append",
-            meta={"kind": "token_ivf", "n_cells": n_cells, "dim": LI_DIM},
-            base_version=0,
-        )
-    else:
-        cents.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "centroids")
-        )
-        asg.write.mode("overwrite").parquet(os.path.join(path, "token_cells"))
-        doc_cells = (
-            toks.join(
-                F.broadcast(
-                    spark.read.parquet(os.path.join(path, "token_cells"))
-                ),
-                "tok",
-            )
-            .select("cell_id", "doc_id")
-            .distinct()
-        )
-        # one file per cell (r12, guide §6): the distinct's 32-way
-        # shuffle otherwise fans every cell across ~32 writer tasks
-        # (~25 files/cell measured at bench sf), and every pruned probe
-        # re-opens all of them; keyed repartition collapses the layout
-        # — the same fix measured on the NSW/HNSW graph builds
-        # (0.70-0.74x search ratios) and what the tlog write_data path
-        # already does.
-        doc_cells.repartition(F.col("cell_id")).write.mode(
-            "overwrite"
-        ).partitionBy("cell_id").parquet(os.path.join(path, "doc_cells"))
+    adds = _retag(t.write_data(cents.coalesce(1)), TLOG_TIVF_CENTROIDS_TAG)
+    asg_written = t.write_data(asg)
+    asg_df = spark.read.parquet(
+        *[os.path.join(path, a["path"]) for a in asg_written]
+    )
+    adds += _retag(asg_written, TLOG_TIVF_TOKENS_TAG)
+    doc_cells = (
+        toks.join(F.broadcast(asg_df), "tok")
+        .select("cell_id", "doc_id")
+        .distinct()
+    )
+    adds += t.write_data(doc_cells, bucket_expr=F.col("cell_id"))
     # atomic sidecar (tmp + os.replace — the operators/ann._write_
     # geometry doctrine): a crash mid-write can never leave a corrupt
     # sidecar inside an otherwise-valid layout. Probes VALIDATE it
@@ -566,6 +525,14 @@ def token_ivf_build(
     with open(tmp, "w") as f:
         json.dump({"kind": "token_ivf", "n_cells": n_cells, "dim": LI_DIM}, f)
     os.replace(tmp, os.path.join(path, _GEOM))
+    # the init commit comes LAST: a committed layout always has its
+    # sidecar, so a version > 0 is the "built" marker
+    t.commit(
+        adds=adds,
+        op="append",
+        meta={"kind": "token_ivf", "n_cells": n_cells, "dim": LI_DIM},
+        base_version=0,
+    )
 
 
 def token_ivf_append(docs_new: DataFrame, path: str) -> None:
@@ -578,68 +545,52 @@ def token_ivf_append(docs_new: DataFrame, path: str) -> None:
       ``_assign_tokens`` pure function the build used, against the
       centroids read back from the layout (bounded) — a token already
       in the vocabulary lands on its existing cell by construction;
-    - unseen tokens append to ``token_cells`` (left_anti against the
+    - unseen tokens append to the token-cell table (left_anti against the
       resident vocabulary — O(new vocab) work);
-    - the new docs' (cell_id, doc_id) rows append as new files into
-      their ``doc_cells`` partitions — existing files byte-untouched,
-      probes see the union at unchanged plan shape.
+    - the new docs' (cell_id, doc_id) rows append as new cell-tagged
+      files — existing files byte-untouched, probes see the union at
+      unchanged plan shape.
+
+    Both land as ONE blind append commit — never blocked by a racing
+    vacuum.
 
     O(batch) end to end: the resident corpus is never re-tokenized.
     A rebuild over the grown corpus MAY pick different centroids
     (they derive from the vocabulary's md5 order); the append
     contract is frozen-codebook semantics, same as the ANN tiers —
     the registered probe's oracle replays exactly that."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
     validate_token_ivf_geometry(path)
     spark = docs_new.sparkSession
-    t = _tivf_tlog(path)
-    cents = _read_centroids_df(spark, path)
+    t = TLog(path)
+    snap = t.snapshot()
+    cents = _tlog_read_tags(spark, t, snap, [TLOG_TIVF_CENTROIDS_TAG])
     toks = doc_distinct_tokens(docs_new)
     vocab_new = toks.select("tok").distinct().withColumn(
         "_nv", li_token_nvec("tok")
     )
     asg_new = _assign_tokens(vocab_new, cents)
-    if t is not None:
-        # ONE blind append commit: unseen-vocabulary rows + the new
-        # docs' (cell, doc) rows — never blocked by a racing vacuum
-        snap = t.snapshot()
-        resident = _tlog_read_tags(
-            spark, t, snap, [TLOG_TIVF_TOKENS_TAG]
-        ).select("tok")
-        adds = _retag(
-            t.write_data(asg_new.join(resident, "tok", "left_anti")),
-            TLOG_TIVF_TOKENS_TAG,
-        )
-        adds += t.write_data(
-            toks.join(F.broadcast(asg_new), "tok")
-            .select("cell_id", "doc_id")
-            .distinct(),
-            bucket_expr=F.col("cell_id"),
-        )
-        t.commit(adds=adds, op="append")
-        return
-    resident = spark.read.parquet(
-        os.path.join(path, "token_cells")
-    ).select("tok")
-    asg_new.join(resident, "tok", "left_anti").write.mode("append").parquet(
-        os.path.join(path, "token_cells")
+    resident = _tlog_read_tags(spark, t, snap, [TLOG_TIVF_TOKENS_TAG]).select(
+        "tok"
     )
-    (
+    adds = _retag(
+        t.write_data(asg_new.join(resident, "tok", "left_anti")),
+        TLOG_TIVF_TOKENS_TAG,
+    )
+    adds += t.write_data(
         toks.join(F.broadcast(asg_new), "tok")
         .select("cell_id", "doc_id")
-        .distinct()
-        .write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(os.path.join(path, "doc_cells"))
+        .distinct(),
+        bucket_expr=F.col("cell_id"),
     )
+    t.commit(adds=adds, op="append")
 
 
 def _read_centroids_df(spark: SparkSession, path: str) -> DataFrame:
-    t = _tivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(os.path.join(path, "centroids"))
-    return _tlog_read_tags(
-        spark, t, t.snapshot(), [TLOG_TIVF_CENTROIDS_TAG]
-    )
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    return TLog(path).read(spark, buckets=[TLOG_TIVF_CENTROIDS_TAG])
 
 
 def _collect_centroids(spark: SparkSession, path: str) -> list[tuple]:
@@ -732,7 +683,7 @@ def maxsim_multi_probe(
     index_path: str,
     queries: list[tuple[int, list[str]]],
     docs: DataFrame,
-    n_buckets: int = 16,
+    *,
     k: int = 5,
     candidates: str = "lexical",
     nprobe: int = TOKEN_IVF_NPROBE,
@@ -787,18 +738,21 @@ def maxsim_multi_probe(
     """
     if candidates == "lexical":
         from cnc_visionsearch_spark.operators.text_index import (
+            _buckets_of,
+            _snapshot,
             read_postings,
-            term_bucket,
         )
 
         all_terms = sorted({t for _, ts in queries for t in ts})
-        buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
+        snap = _snapshot(index_path)
         posts = (
-            read_postings(spark, index_path)
-            .filter(
-                F.col("bucket").isin(buckets)
-                & F.col("term").isin(all_terms)
+            read_postings(
+                spark,
+                index_path,
+                buckets=_buckets_of(all_terms, snap),
+                snap=snap,
             )
+            .filter(F.col("term").isin(all_terms))
             .select("term", "doc_id")
         )
         # the literal (qid, term) rows are DEDUPED driver-side (a
@@ -806,7 +760,10 @@ def maxsim_multi_probe(
         # DISTINCT qtok anyway), which makes (qid, term, doc_id) rows
         # of `matched` unique by construction — postings are unique per
         # (term, doc_id) at any visible snapshot (build groups by
-        # (term, doc_id); tombstones hide every copy of a doc)
+        # (term, doc_id); inverted_append requires new doc_ids and a
+        # txn replay commits nothing; tombstones hide every copy of a
+        # doc — pinned by tests/test_tlog_artifacts.py::
+        # test_inverted_append_keeps_postings_unique)
         qterms = spark.createDataFrame(
             sorted({(qid, t) for qid, ts in queries for t in ts}),
             "qid bigint, term string",
@@ -827,8 +784,10 @@ def maxsim_multi_probe(
             # branch always did; one shuffle less in the candidate
             # subtree the construction barrier executes)
             # r12 (guide §2.4): count(*) replaces count_distinct(term)
-            # — `matched` rows are (qid, term, doc_id)-unique (above),
-            # so the counts are EQUAL, and the distinct-aggregate's
+            # — `matched` rows are (qid, term, doc_id)-unique (above;
+            # tests/test_tlog_artifacts.py::
+            # test_inverted_append_keeps_postings_unique pins the
+            # postings side), so the counts are EQUAL, and the distinct-aggregate's
             # extra dedup exchange disappears from the candidate
             # subtree (plan: 2 Exchange -> 1 in the barrier's first
             # job; interleaved A/B 3 blocks, all faster: 2.42->2.32

@@ -1,21 +1,19 @@
 """Advisory single-writer lock for NON-transactional artifact layouts.
 
-Scope decision (r9 verdict, recorded in SCALE.md "Table-format
-stance"): the high-churn derived artifacts — inverted index, IVF,
-MinHash store, token-IVF, the NSW/HNSW graphs (r10) and the shard
-tier (r11), each via their ``use_tlog=True`` builds — arbitrate
-concurrent mutation through the tlog (optimistic concurrency,
-conflict domains, snapshot isolation). The remaining mutable layouts
-(LEGACY tmp+rename graph/shard layouts and the shared crash-safe
-vacuum rewrite) are LOW-churn artifacts where the tlog's per-commit
-machinery buys little — but a graph append racing a compact there was
-previously UNARBITRATED: two writers could interleave partition
-writes and leave a layout neither intended. This module makes the single-writer scope
-decision ENFORCEABLE instead of advisory: every mutation of one
-layout serializes on a create-exclusive lockfile, and a second
-concurrent mutator fails LOUDLY (:class:`LayoutBusyError`) rather
-than corrupting the layout. Transactional layouts skip the lock —
-the commit log IS their arbitration (see :func:`single_writer`).
+Scope (recorded in SCALE.md "Table-format stance"): the inverted
+index, token-IVF, MinHash store and the NSW/HNSW graphs exist only as
+transaction-log layouts, and the IVF and shard tiers arbitrate
+through the log when built with ``use_tlog=True`` — optimistic
+concurrency, conflict domains, snapshot isolation. This lock covers
+the mutators that still run on the IVF family's LEGACY tmp+rename
+layouts: ``ann.ivf_vacuum`` (the shared crash-safe vacuum rewrite) and
+``ann.shard_append``. Without it two writers could interleave
+partition writes there and leave a layout neither intended; with it
+every mutation of one layout serializes on a create-exclusive
+lockfile, and a second concurrent mutator fails LOUDLY
+(:class:`LayoutBusyError`) rather than corrupting the layout.
+Transactional layouts skip the lock — the commit log IS their
+arbitration (see :func:`single_writer`).
 
 Mechanics: ``os.open(..., O_CREAT | O_EXCL)`` on ``<layout>/_MUTATION_LOCK``
 — the same POSIX create-exclusive primitive the tlog's commit claim

@@ -2,31 +2,29 @@
 probes — the lexical twin of the ANN tiers' "derived layout, probed by
 partition pruning" design (SURVEY §4).
 
-Layout: ``{path}/postings`` with one row per (term, doc) —
-``(term, doc_id, tf, positions)`` where positions are the 1-based
-whitespace-token offsets — PARTITIONED BY ``bucket`` = the portable
-31-bit md5 hash of the term (operators/dedup._base_hash, the same hash
-family the MinHash tier uses) mod ``n_buckets``. A query touches only
-its terms' buckets: term lookup is partition pruning, and at 100 TB a
-phrase query reads |terms|/n_buckets of the postings instead of
-scanning the corpus. Positions in the row make phrase adjacency a
-per-row array intersection — no second corpus pass, no shuffle.
+Postings: one row per (term, doc) — ``(term, doc_id, tf, positions,
+bucket)`` where positions are the 1-based whitespace-token offsets and
+``bucket`` = the portable 31-bit md5 hash of the term
+(operators/dedup._base_hash, the same hash family the MinHash tier
+uses) mod ``n_buckets``. A query touches only its terms' buckets: term
+lookup is file pruning, and at 100 TB a phrase query reads
+|terms|/n_buckets of the postings instead of scanning the corpus.
+Positions in the row make phrase adjacency a per-row array
+intersection — no second corpus pass, no shuffle.
 
-``{path}/doclens`` is the layout's norms table — one (doc_id, dl) row
-per document, dl = whitespace token count. It is what lets RANKED
-probes (BM25, :func:`bm25_probe`) run without ever touching the
-corpus: tf and df come from the pruned postings buckets, dl from this
-table, and avgdl/N from its 1-row aggregate. Every production
-inverted index (Lucene norms, Tantivy fieldnorms) keeps exactly this
-side table; it is ~1/avg_dl the size of the postings and appends are
-per-document facts, so :func:`inverted_append` extends it O(batch).
+Doclens: the layout's norms table — one (doc_id, dl) row per document,
+dl = whitespace token count. It is what lets RANKED probes (BM25,
+:func:`bm25_probe`) run without ever touching the corpus: tf and df
+come from the pruned postings buckets, dl from this table, and
+avgdl/N from its 1-row aggregate. Every production inverted index
+(Lucene norms, Tantivy fieldnorms) keeps exactly this side table; it
+is ~1/avg_dl the size of the postings and appends are per-document
+facts, so :func:`inverted_append` extends it O(batch).
 
-TRANSACTIONAL MODE (r8 verdict #1): ``inverted_build(..,
-use_tlog=True)`` puts the layout under the sources/tlog commit
-protocol — the tmp+rename convention's documented gap ("no conflict
-detection between DIFFERENT mutations of one artifact",
-SCALE.md table-format stance) closes for this artifact. Every
-mutation is one atomic commit; conflict DOMAINS are the postings'
+Storage: the layout is a sources/tlog table (a minimal Delta
+protocol). Every mutation is one atomic commit; the geometry
+(``n_buckets``) rides the init commit's meta, so probes derive their
+buckets from the layout itself. Conflict DOMAINS are the postings'
 term-hash buckets plus two reserved tags (doclens, tombstones), so:
 
 - appends (new docs) and deletes (tombstones) are BLIND commits —
@@ -38,11 +36,9 @@ term-hash buckets plus two reserved tags (doclens, tombstones), so:
 - readers get snapshot isolation: a probe planned at version N never
   sees a torn mix of pre- and post-vacuum files.
 
-Every probe reads through :func:`read_postings`/:func:`read_doclens`
-(the ONLY sanctioned readers), which dispatch on the layout's
-``_tlog/`` dir — legacy directories keep byte-identical behavior, and
-probe results are mode-invariant by construction (same rows either
-way).
+Every probe reads ONE snapshot and passes it to :func:`read_postings`
+/ :func:`read_doclens` (the ONLY sanctioned readers — they apply the
+tombstone filter).
 """
 
 from __future__ import annotations
@@ -72,7 +68,7 @@ __all__ = [
 
 def term_bucket(term: str, n_buckets: int) -> int:
     """Driver-side twin of the layout's bucket hash (md5[:8] mod
-    2^31-1 mod n_buckets) — lets a probe prune partitions without a
+    2^31-1 mod n_buckets) — lets a probe prune files without a
     cluster job, exactly like ivf_probe_cells ranks cells."""
     h = int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % _MERSENNE31
     return h % n_buckets
@@ -85,14 +81,13 @@ def term_bucket(term: str, n_buckets: int) -> int:
 TLOG_DOCLENS_TAG = 10_000
 TLOG_TOMBS_TAG = 10_001
 
-
-def _tlog_of(path: str):
-    """The layout's TLog handle when it is a transactional layout
-    (``{path}/_tlog`` exists), else None — the mode dispatch every
-    lifecycle function and reader shares."""
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
-
-    return tlog_of(path)
+# schemas of the three subtables — an empty tag set still reads as a
+# typed, empty frame
+_POSTINGS_SCHEMA = (
+    "term string, doc_id bigint, tf bigint, positions array<int>, bucket int"
+)
+_DOCLENS_SCHEMA = "doc_id bigint, dl bigint"
+_TOMBS_SCHEMA = "doc_id bigint"
 
 
 def _retag(adds: list[dict], tag: int) -> list[dict]:
@@ -104,30 +99,50 @@ def _retag(adds: list[dict], tag: int) -> list[dict]:
     return adds
 
 
+def _snapshot(path: str):
+    """The latest snapshot of the inverted layout at ``path``."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    snap = TLog(path).snapshot()
+    if snap.meta.get("kind") != "inverted":
+        raise ValueError(
+            f"{path} holds no inverted index; build it with inverted_build"
+        )
+    return snap
+
+
+def _n_buckets(snap) -> int:
+    return int(snap.meta["n_buckets"])
+
+
+def _buckets_of(terms, snap) -> list[int]:
+    """The layout's term-hash buckets holding ``terms``."""
+    nb = _n_buckets(snap)
+    return sorted({term_bucket(t, nb) for t in terms})
+
+
 def inverted_build(
-    docs: DataFrame, path: str, n_buckets: int = 16, use_tlog: bool = False
+    docs: DataFrame, path: str, n_buckets: int = 16, use_tlog: bool = True
 ) -> None:
     """Materialize the postings layout: posexplode the whitespace
     tokens (the corpus tokenization convention shared with every text
     oracle), aggregate per (term, doc) into tf + sorted positions, and
-    write partitioned by the term's hash bucket. One shuffle, keyed on
+    write tagged by the term's hash bucket. One shuffle, keyed on
     (term, doc_id) — the shuffle carries positions, never text.
 
     Also writes the ``doclens`` norms table (doc_id, dl) — shuffle-free
-    (a per-row projection of the same scan).
+    (a per-row projection of the same scan). Both land in ONE atomic
+    init commit carrying the layout geometry in commit meta. Refuses a
+    non-empty log (the tlog_init_id_mapping doctrine: a second init
+    would append a duplicate full index).
 
-    ``use_tlog=True`` builds the TRANSACTIONAL layout (module
-    docstring): same rows, one atomic init commit carrying both
-    subtables + the layout geometry in commit meta; every later
-    mutation goes through the commit protocol. Refuses a non-empty
-    log (the tlog_init_id_mapping doctrine: a second init would append
-    a duplicate full index)."""
+    ``use_tlog`` accepts only True: the transaction log is the only
+    layout."""
     if not use_tlog:
-        _postings(docs, n_buckets).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(f"{path}/postings")
-        _doclens(docs).write.mode("overwrite").parquet(f"{path}/doclens")
-        return
+        raise ValueError(
+            "inverted_build: the legacy directory layout was removed; "
+            "the transaction-log layout is the only one"
+        )
     from cnc_visionsearch_spark.sources.tlog import TLog
 
     t = TLog(path)
@@ -136,15 +151,7 @@ def inverted_build(
             f"inverted_build: tlog layout {path} already holds "
             f"{t.latest_version()} commit(s); wipe to rebuild"
         )
-    adds = t.write_data(
-        # bucket stays a DATA column (int, matching the legacy
-        # partition-inferred type) — probes filter it identically in
-        # both modes; the log's per-file tag replays it for pruning
-        _postings(docs, n_buckets).withColumn(
-            "bucket", F.col("bucket").cast("int")
-        ),
-        bucket_expr=F.col("bucket"),
-    )
+    adds = t.write_data(_postings(docs, n_buckets), bucket_expr=F.col("bucket"))
     adds += _retag(t.write_data(_doclens(docs)), TLOG_DOCLENS_TAG)
     t.commit(
         adds=adds,
@@ -164,7 +171,11 @@ def _postings(docs: DataFrame, n_buckets: int) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("tf"),
             F.sort_array(F.collect_list("pos")).alias("positions"),
         )
-        .withColumn("bucket", _base_hash(F.col("term")) % F.lit(n_buckets))
+        # bucket stays a DATA column (int) beside the log's per-file
+        # tag, so readers can filter on it
+        .withColumn(
+            "bucket", (_base_hash(F.col("term")) % F.lit(n_buckets)).cast("int")
+        )
     )
 
 
@@ -178,7 +189,7 @@ def _doclens(docs: DataFrame) -> DataFrame:
 def inverted_append(
     docs: DataFrame,
     path: str,
-    n_buckets: int = 16,
+    *,
     txn: "tuple[str, int] | None" = None,
 ) -> None:
     """Append a document batch's postings into an existing layout —
@@ -188,34 +199,24 @@ def inverted_append(
     files stay byte-identical, and probes see the new documents at the
     same pruned cost. O(batch), never a corpus rescan.
 
-    On a transactional layout the batch lands as ONE blind append
-    commit (postings adds tagged by bucket + the doclens add) — never
-    blocked by a racing vacuum/compact, which instead detects the new
-    files and recomputes. ``txn`` (app id, batch seq — tlog layouts
-    only) makes an at-least-once replay commit NOTHING: exactly-once
-    index ingest in the TABLE's protocol (the tlog_upsert_stream
-    doctrine extended to a derived artifact)."""
-    t = _tlog_of(path)
-    if t is None:
-        if txn is not None:
-            raise ValueError(
-                "inverted_append: txn idempotence requires a "
-                "transactional layout (inverted_build(use_tlog=True)) "
-                "— a legacy layout would silently double-append on "
-                "replay"
-            )
-        _postings(docs, n_buckets).write.mode("append").partitionBy(
-            "bucket"
-        ).parquet(f"{path}/postings")
-        _doclens(docs).write.mode("append").parquet(f"{path}/doclens")
-        return
-    n_buckets = int(t.snapshot().meta["n_buckets"])
-    adds = t.write_data(
-        _postings(docs, n_buckets).withColumn(
-            "bucket", F.col("bucket").cast("int")
-        ),
-        bucket_expr=F.col("bucket"),
-    )
+    The incoming ``doc_id``s must be NEW to the layout: postings stay
+    unique per (term, doc_id) only because no document is indexed
+    twice (tests/test_tlog_artifacts.py::
+    test_inverted_append_keeps_postings_unique pins it, replay
+    included).
+
+    The batch lands as ONE blind append commit (postings adds tagged
+    by bucket + the doclens add) — never blocked by a racing
+    vacuum/compact, which instead detects the new files and
+    recomputes. ``txn`` (app id, batch seq) makes an at-least-once
+    replay commit NOTHING: exactly-once index ingest in the TABLE's
+    protocol (the tlog_upsert_stream doctrine extended to a derived
+    artifact)."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    t = TLog(path)
+    n_buckets = _n_buckets(_snapshot(path))
+    adds = t.write_data(_postings(docs, n_buckets), bucket_expr=F.col("bucket"))
     adds += _retag(t.write_data(_doclens(docs)), TLOG_DOCLENS_TAG)
     t.commit(adds=adds, op="append", txn=txn)
 
@@ -223,115 +224,84 @@ def inverted_append(
 def inverted_delete(spark, path: str, doc_ids: list[int]) -> None:
     """Tombstone delete from the inverted layout — the document
     analog of operators/ann.ivf_delete (and another operation the
-    reference structurally lacks, main.py:119-126): append the doc ids
-    to the layout's tombstone set; EVERY probe reads postings and
-    doclens through :func:`read_postings` / :func:`read_doclens`,
-    which anti-join the broadcast-small tombstone set — deleted
-    documents disappear from hits, tf/df, and the N/avgdl norms
-    immediately, resident postings files stay byte-identical.
-    O(batch); physical removal rides :func:`inverted_vacuum`.
-    Transactional layouts commit the tombstone file as a blind append
-    under the reserved tombstone domain tag."""
-    df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
-    t = _tlog_of(path)
-    if t is None:
-        df.write.mode("append").parquet(f"{path}/tombstones")
-        return
-    adds = _retag(t.write_data(df), TLOG_TOMBS_TAG)
-    t.commit(adds=adds, op="append")
+    reference structurally lacks, main.py:119-126): commit the doc ids
+    as a tombstone file, a blind append under the reserved tombstone
+    domain tag; EVERY probe reads postings and doclens through
+    :func:`read_postings` / :func:`read_doclens`, which anti-join the
+    broadcast-small tombstone set — deleted documents disappear from
+    hits, tf/df, and the N/avgdl norms immediately, resident postings
+    files stay byte-identical. O(batch); physical removal rides
+    :func:`inverted_vacuum`."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    t = TLog(path)
+    df = spark.createDataFrame([(int(i),) for i in doc_ids], _TOMBS_SCHEMA)
+    t.commit(adds=_retag(t.write_data(df), TLOG_TOMBS_TAG), op="append")
 
 
-def _tlog_read(spark, t, snap, tags, schema=None) -> DataFrame | None:
+def _tlog_read(spark, path: str, snap, tags, schema: str) -> DataFrame:
     """DataFrame over the snapshot files whose domain tag is in
-    ``tags`` (None when the snapshot holds none and no schema given)."""
+    ``tags`` — a typed empty frame when the snapshot holds none."""
     paths = snap.files_in(tags)
     if not paths:
-        if schema is None:
-            return None
         return spark.createDataFrame([], schema)
-    full = [os.path.join(t.root, p) for p in paths]
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(*full)
+    return spark.read.parquet(*[os.path.join(path, p) for p in paths])
 
 
-def _without_deleted(spark, path: str, df: DataFrame, snap=None) -> DataFrame:
+def _without_deleted(spark, path: str, df: DataFrame, snap) -> DataFrame:
     """Anti-join the layout's tombstones (broadcast — deletes are
-    batch-scale). No-op when the layout has none, so delete-free
-    layouts keep their exact plan shape. ``snap``: a transactional
-    layout's snapshot (tombstones come from its reserved tag, so the
-    filter sees exactly the version the caller planned against)."""
-    if snap is not None:
-        t = _tlog_of(path)
-        tf = _tlog_read(spark, t, snap, [TLOG_TOMBS_TAG])
-        if tf is None:
-            return df
-        return df.join(
-            F.broadcast(tf.select("doc_id").distinct()), "doc_id", "left_anti"
-        )
-    if not os.path.exists(f"{path}/tombstones"):
+    batch-scale), read from the SAME snapshot the caller planned
+    against. No-op when the snapshot holds none, so delete-free
+    layouts keep their exact plan shape."""
+    if not snap.files_in([TLOG_TOMBS_TAG]):
         return df
-    tombs = (
-        spark.read.parquet(f"{path}/tombstones").select("doc_id").distinct()
+    tombs = _tlog_read(spark, path, snap, [TLOG_TOMBS_TAG], _TOMBS_SCHEMA)
+    return df.join(
+        F.broadcast(tombs.select("doc_id").distinct()), "doc_id", "left_anti"
     )
-    return df.join(F.broadcast(tombs), "doc_id", "left_anti")
 
 
-def read_postings(spark, path: str, buckets=None) -> DataFrame:
+def read_postings(spark, path: str, buckets=None, snap=None) -> DataFrame:
     """The ONLY sanctioned way to read the postings — applies the
     tombstone filter so no probe path can resurrect deleted documents
-    (the ANN tiers' read-through-the-filter doctrine). Dispatches on
-    the layout mode: transactional layouts read one SNAPSHOT (postings
-    files = tags < the reserved range), legacy layouts read the
-    directory.
+    (the ANN tiers' read-through-the-filter doctrine).
 
-    ``buckets`` (optional, a probe's term-bucket list): on a
-    transactional layout it prunes at the LOG level — only those
-    buckets' files enter the scan, no directory listing, no footer
-    reads for pruned buckets (legacy layouts get the same effect from
-    the caller's partition-pruning ``bucket`` filter, which callers
-    apply in both modes)."""
-    t = _tlog_of(path)
-    if t is None:
-        return _without_deleted(
-            spark, path, spark.read.parquet(f"{path}/postings")
-        )
-    snap = t.snapshot()
+    ``buckets`` (optional, a probe's term-bucket list) prunes at the
+    LOG level — only those buckets' files enter the scan, no directory
+    listing, no footer reads for pruned buckets. ``snap``: the
+    snapshot the caller already holds (default: the latest) — a probe
+    reads one snapshot and hands it to both readers."""
+    if snap is None:
+        snap = _snapshot(path)
     tags = (
         sorted(buckets)
         if buckets is not None
-        else list(range(int(snap.meta["n_buckets"])))
+        else list(range(_n_buckets(snap)))
     )
-    posts = _tlog_read(spark, t, snap, tags)
-    return _without_deleted(spark, path, posts, snap=snap)
+    posts = _tlog_read(spark, path, snap, tags, _POSTINGS_SCHEMA)
+    return _without_deleted(spark, path, posts, snap)
 
 
-def read_doclens(spark, path: str) -> DataFrame:
+def read_doclens(spark, path: str, snap=None) -> DataFrame:
     """Tombstone-aware reader for the doclens norms table: deleted
-    documents leave N and avgdl as if they were never indexed."""
-    t = _tlog_of(path)
-    if t is None:
-        return _without_deleted(
-            spark, path, spark.read.parquet(f"{path}/doclens")
-        )
-    snap = t.snapshot()
-    dl = _tlog_read(spark, t, snap, [TLOG_DOCLENS_TAG])
-    return _without_deleted(spark, path, dl, snap=snap)
+    documents leave N and avgdl as if they were never indexed.
+    ``snap`` as in :func:`read_postings`."""
+    if snap is None:
+        snap = _snapshot(path)
+    dl = _tlog_read(spark, path, snap, [TLOG_DOCLENS_TAG], _DOCLENS_SCHEMA)
+    return _without_deleted(spark, path, dl, snap)
 
 
-def phrase_probe(
-    spark, path: str, first: str, second: str, n_buckets: int = 16
-) -> DataFrame:
+def phrase_probe(spark, path: str, first: str, second: str) -> DataFrame:
     """Adjacent-bigram phrase query over the postings layout: read ONLY
     the two terms' buckets (partition pruning, driver-side
     :func:`term_bucket`), join the two postings rows per doc, and count
     adjacency as |positions(first)+1 ∩ positions(second)| — per-row
     array arithmetic on metadata-sized rows. Returns
     (doc_id, n_occurrences > 0)."""
-    buckets = sorted({term_bucket(first, n_buckets), term_bucket(second, n_buckets)})
-    posts = read_postings(spark, path, buckets=buckets).filter(
-        F.col("bucket").isin(buckets)
+    snap = _snapshot(path)
+    posts = read_postings(
+        spark, path, buckets=_buckets_of((first, second), snap), snap=snap
     )
     a = posts.filter(F.col("term") == first).select(
         "doc_id", F.col("positions").alias("pa")
@@ -362,7 +332,6 @@ def proximity_probe(
     second: str,
     window: int = 5,
     k: int = 10,
-    n_buckets: int = 16,
 ) -> DataFrame:
     """Proximity-ranked two-term search (the sloppy-phrase / NEAR
     operator of Lucene's SpanNearQuery): read ONLY the two terms'
@@ -374,11 +343,9 @@ def proximity_probe(
     doc_id ASC): many tight co-occurrences beat one loose one, and the
     tightest pairing breaks ties. Docs where both terms occur but
     never within the window do not rank."""
-    buckets = sorted(
-        {term_bucket(first, n_buckets), term_bucket(second, n_buckets)}
-    )
-    posts = read_postings(spark, path, buckets=buckets).filter(
-        F.col("bucket").isin(buckets)
+    snap = _snapshot(path)
+    posts = read_postings(
+        spark, path, buckets=_buckets_of((first, second), snap), snap=snap
     )
     a = posts.filter(F.col("term") == first).select(
         "doc_id", F.col("positions").alias("pa")
@@ -417,7 +384,7 @@ def bm25_probe(
     spark,
     path: str,
     terms: list[str],
-    n_buckets: int = 16,
+    *,
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
@@ -442,17 +409,16 @@ def bm25_probe(
     data lake."""
     from cnc_visionsearch_spark.functions.vector import fixed_point_q
 
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+    snap = _snapshot(path)
     posts = (
-        read_postings(spark, path, buckets=buckets)
-        .filter(F.col("bucket").isin(buckets))
+        read_postings(spark, path, buckets=_buckets_of(terms, snap), snap=snap)
         .filter(F.col("term").isin(terms))
         .select("term", "doc_id", F.col("tf").cast("double").alias("tf"))
     )
     dfreq = posts.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    dl = read_doclens(spark, path).select(
+    dl = read_doclens(spark, path, snap=snap).select(
         "doc_id", F.col("dl").cast("double").alias("dl")
     )
     stats = dl.agg(
@@ -485,7 +451,7 @@ def bm25_multi_probe(
     spark,
     path: str,
     queries: list[tuple[int, list[str]]],
-    n_buckets: int = 16,
+    *,
     k: int = 5,
     k1: float = 1.2,
     b: float = 0.75,
@@ -510,17 +476,18 @@ def bm25_multi_probe(
     from cnc_visionsearch_spark.functions.vector import fixed_point_q
 
     all_terms = sorted({t for _, ts in queries for t in ts})
-    buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
+    snap = _snapshot(path)
     posts = (
-        read_postings(spark, path, buckets=buckets)
-        .filter(F.col("bucket").isin(buckets))
+        read_postings(
+            spark, path, buckets=_buckets_of(all_terms, snap), snap=snap
+        )
         .filter(F.col("term").isin(all_terms))
         .select("term", "doc_id", F.col("tf").cast("double").alias("tf"))
     )
     dfreq = posts.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    dl = read_doclens(spark, path).select(
+    dl = read_doclens(spark, path, snap=snap).select(
         "doc_id", F.col("dl").cast("double").alias("dl")
     )
     stats = dl.agg(
@@ -562,119 +529,39 @@ def bm25_multi_probe(
     )
 
 
-def _swap_in(live: str) -> None:
-    """Crash-safe directory swap (compact_layout's order — see
-    sources/formats.py:120): live -> ``.bak``, tmp -> live, drop
-    ``.bak``. A ``rmtree(live); rename(tmp, live)`` order loses the
-    partition forever if the process dies between the two calls; with
-    this order every crash window leaves either the old or the new
-    layout plus a recoverable sibling."""
-    import shutil
-
-    tmp = live + ".vacuum_tmp"
-    bak = live + ".vacuum_bak"
-    os.rename(live, bak)
-    os.rename(tmp, live)
-    shutil.rmtree(bak)
-
-
-def _heal_swaps(root: str) -> None:
-    """Self-heal leftovers of a crashed ``_swap_in`` under ``root``:
-    a ``.vacuum_bak`` with no live path (death between the renames) is
-    restored; a ``.vacuum_bak``/``.vacuum_tmp`` beside a live path
-    (death before or after the swap) is discarded."""
-    import shutil
-
-    if not os.path.isdir(root):
-        return
-    for name in os.listdir(root):
-        full = os.path.join(root, name)
-        if name.endswith(".vacuum_bak"):
-            live = full[: -len(".vacuum_bak")]
-            if not os.path.exists(live):
-                os.rename(full, live)
-            else:
-                shutil.rmtree(full)
-        elif name.endswith(".vacuum_tmp"):
-            shutil.rmtree(full)
-
-
 def inverted_vacuum(spark, path: str) -> None:
     """Apply accumulated tombstones physically — the text-index twin
-    of ann.ivf_vacuum: rewrite ONLY the postings bucket partitions
-    that contain tombstoned docs (a document's terms spread across
-    buckets, so the touched set is wider than the vector tiers' — the
-    cost a vacuum SCHEDULE amortizes), rewrite the small doclens norms
-    table wholesale, then drop the tombstone dir. Results are
-    unchanged by construction (the read_postings/read_doclens
-    anti-join already hid the rows); tombstone-free probe plans are
-    restored. Untouched bucket partitions keep their files
-    byte-identical. Each rewritten dir is swapped in crash-safely
-    (``_swap_in``) and entry self-heals any earlier crash
-    (``_heal_swaps``).
+    of ann.ivf_vacuum — as ONE rewrite commit that (a) rewrites only
+    the postings buckets holding tombstoned docs (a document's terms
+    spread across buckets, so the touched set is wider than the
+    vector tiers' — the cost a vacuum SCHEDULE amortizes), (b)
+    rewrites the small doclens norms table, (c) drops every tombstone
+    file. Results are unchanged by construction (the
+    read_postings/read_doclens anti-join already hid the rows);
+    tombstone-free probe plans are restored and untouched buckets keep
+    their files.
 
-    On a TRANSACTIONAL layout the whole vacuum is one rewrite commit
-    declaring the touched buckets + the doclens and tombstone domains:
-    a racing append/delete raises :class:`TLogConflictError` (wrap in
-    ``run_transaction`` to retry against the new snapshot), appends
-    are never blocked, and readers see either the whole vacuum or none
-    of it — the crash-safe swap machinery is unnecessary there because
-    data files are immutable and the commit is the atom."""
-    import shutil
+    Conflict domains = the touched buckets + the two reserved tags, so
+    a racing append into an UNtouched bucket... also conflicts via the
+    doclens tag — the honest arbitration: every append extends
+    doclens, whose rewrite this vacuum owns; the loser is always the
+    vacuum (wrap in ``run_transaction`` to recompute against the new
+    snapshot), never the append. Readers see either the whole vacuum
+    or none of it: data files are immutable and the commit is the
+    atom."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
-    t = _tlog_of(path)
-    if t is not None:
-        _inverted_vacuum_tlog(spark, t)
-        return
-    _heal_swaps(f"{path}/postings")
-    _heal_swaps(path)
-    tdir = f"{path}/tombstones"
-    if not os.path.exists(tdir):
-        return
-    tombs = spark.read.parquet(tdir).select("doc_id").distinct()
-    posts = spark.read.parquet(f"{path}/postings")
-    touched = [
-        r[0]
-        for r in posts.join(F.broadcast(tombs), "doc_id")
-        .select("bucket")
-        .distinct()
-        .collect()
-    ]
-    for bv in touched:
-        part = f"{path}/postings/bucket={bv}"
-        if not os.path.exists(part):
-            continue
-        kept = spark.read.parquet(part).join(
-            F.broadcast(tombs), "doc_id", "left_anti"
-        )
-        kept.write.mode("overwrite").parquet(part + ".vacuum_tmp")
-        _swap_in(part)
-    kept_dl = spark.read.parquet(f"{path}/doclens").join(
-        F.broadcast(tombs), "doc_id", "left_anti"
-    )
-    kept_dl.write.mode("overwrite").parquet(f"{path}/doclens.vacuum_tmp")
-    _swap_in(f"{path}/doclens")
-    shutil.rmtree(tdir)
-
-
-def _inverted_vacuum_tlog(spark, t) -> None:
-    """Transactional vacuum: ONE rewrite commit that (a) rewrites only
-    the postings buckets holding tombstoned docs, (b) rewrites the
-    doclens norms table, (c) drops every tombstone file. Conflict
-    domains = the touched buckets + the two reserved tags, so a racing
-    append into an UNtouched bucket... also conflicts via the doclens
-    tag — the honest arbitration: every append extends doclens, whose
-    rewrite this vacuum owns; the loser is always the vacuum
-    (run_transaction recomputes), never the append."""
-    snap = t.snapshot()
+    t = TLog(path)
+    snap = _snapshot(path)
     tomb_files = snap.files_in([TLOG_TOMBS_TAG])
     if not tomb_files:
         return
-    n_buckets = int(snap.meta["n_buckets"])
-    tombs = _tlog_read(spark, t, snap, [TLOG_TOMBS_TAG]).select(
-        "doc_id"
-    ).distinct()
-    posts = _tlog_read(spark, t, snap, list(range(n_buckets)))
+    tombs = _tlog_read(
+        spark, path, snap, [TLOG_TOMBS_TAG], _TOMBS_SCHEMA
+    ).select("doc_id").distinct()
+    posts = _tlog_read(
+        spark, path, snap, list(range(_n_buckets(snap))), _POSTINGS_SCHEMA
+    )
     touched = sorted(
         r[0]
         for r in posts.join(F.broadcast(tombs), "doc_id")
@@ -684,15 +571,15 @@ def _inverted_vacuum_tlog(spark, t) -> None:
     )  # bounded: <= n_buckets
     adds = []
     if touched:
-        kept = _tlog_read(spark, t, snap, touched).join(
+        kept = _tlog_read(spark, path, snap, touched, _POSTINGS_SCHEMA).join(
             F.broadcast(tombs), "doc_id", "left_anti"
         )
         adds += t.write_data(kept, bucket_expr=F.col("bucket"))
-    dl = _tlog_read(spark, t, snap, [TLOG_DOCLENS_TAG])
+    dl = _tlog_read(spark, path, snap, [TLOG_DOCLENS_TAG], _DOCLENS_SCHEMA)
     kept_dl = dl.join(F.broadcast(tombs), "doc_id", "left_anti")
     adds += _retag(t.write_data(kept_dl), TLOG_DOCLENS_TAG)
     removes = (
-        snap.files_in(touched if touched else [])
+        snap.files_in(touched)
         + snap.files_in([TLOG_DOCLENS_TAG])
         + tomb_files
     )
@@ -708,17 +595,15 @@ def _inverted_vacuum_tlog(spark, t) -> None:
 
 
 def inverted_compact(spark, path: str) -> None:
-    """Settle a transactional layout's accreted files: rewrite every
-    bucket that holds more than one file into one file, plus the
-    doclens table — the maintenance.compact_layout twin expressed as a
-    tlog rewrite (a racing append conflicts the compaction, never the
-    reverse). No-op on a single-file-per-bucket layout and on legacy
-    layouts (maintenance.py's compact_layout already covers those)."""
-    t = _tlog_of(path)
-    if t is None:
-        return
-    snap = t.snapshot()
-    n_buckets = int(snap.meta["n_buckets"])
+    """Settle the layout's accreted files: rewrite every bucket that
+    holds more than one file into one file, plus the doclens table —
+    a tlog rewrite commit (a racing append conflicts the compaction,
+    never the reverse). No-op on a single-file-per-bucket layout."""
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    t = TLog(path)
+    snap = _snapshot(path)
+    n_buckets = _n_buckets(snap)
     by_tag: dict[int, list[str]] = {}
     for p, b in snap.files:
         by_tag.setdefault(b, []).append(p)
@@ -732,11 +617,13 @@ def inverted_compact(spark, path: str) -> None:
     if multi:
         # write_data's repartition("_tb") already lands each bucket's
         # rows in one task -> one file per bucket
-        kept = _tlog_read(spark, t, snap, multi)
+        kept = _tlog_read(spark, path, snap, multi, _POSTINGS_SCHEMA)
         adds += t.write_data(kept, bucket_expr=F.col("bucket"))
         removes += snap.files_in(multi)
     if dl_multi:
-        dl = _tlog_read(spark, t, snap, [TLOG_DOCLENS_TAG]).coalesce(1)
+        dl = _tlog_read(
+            spark, path, snap, [TLOG_DOCLENS_TAG], _DOCLENS_SCHEMA
+        ).coalesce(1)
         adds += _retag(t.write_data(dl), TLOG_DOCLENS_TAG)
         removes += snap.files_in([TLOG_DOCLENS_TAG])
     t.commit(
@@ -753,7 +640,7 @@ def maxscore_pruned_topk(
     path: str,
     terms: list[str],
     k: int = 10,
-    n_buckets: int = 16,
+    *,
     k1: float = 1.2,
     b: float = 0.75,
     introspect: dict | None = None,
@@ -793,17 +680,16 @@ def maxscore_pruned_topk(
     """
     from cnc_visionsearch_spark.functions.vector import fixed_point_q
 
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+    snap = _snapshot(path)
     posts = (
-        read_postings(spark, path, buckets=buckets)
-        .filter(F.col("bucket").isin(buckets))
+        read_postings(spark, path, buckets=_buckets_of(terms, snap), snap=snap)
         .filter(F.col("term").isin(terms))
         .select("term", "doc_id", F.col("tf").cast("double").alias("tf"))
     )
     dfreq = posts.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    dl = read_doclens(spark, path).select(
+    dl = read_doclens(spark, path, snap=snap).select(
         "doc_id", F.col("dl").cast("double").alias("dl")
     )
     stats = dl.agg(

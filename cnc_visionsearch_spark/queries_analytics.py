@@ -605,31 +605,26 @@ _PHRASE = ("hash", "join")
 
 def ensure_inverted_built(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent inverted-index build over the documents table, once
-    per corpus content (same artifact discipline as ensure_ivf_built)."""
-    import os
-
+    per corpus content (same artifact discipline as ensure_ivf_built):
+    the init commit is the built marker."""
     from cnc_visionsearch_spark.operators.text_index import inverted_build
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import (
+        _ARTIFACT_ROOT,
+        _corpus_tag,
+        _ensure_tlog_layout,
+    )
 
-    # v3 (r9): the SERVING layout is now TRANSACTIONAL (tlog mode) —
-    # probe results are mode-invariant by construction (the
-    # read_postings/read_doclens seams serve both modes, test-pinned),
-    # so every registered text query exercises the committed-snapshot
-    # read path and the index is maintainable by concurrent jobs with
-    # defined conflict semantics. The version suffix retires the
-    # legacy v2 dir.
     path = (
         f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
         f"/inverted_b{_INV_BUCKETS}v3"
     )
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)  # partial tlog builds
-        docs = load_table(spark, sf_dir, "documents")
-        inverted_build(docs, path, n_buckets=_INV_BUCKETS, use_tlog=True)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+    return _ensure_tlog_layout(
+        path,
+        1,
+        lambda: inverted_build(
+            load_table(spark, sf_dir, "documents"), path, n_buckets=_INV_BUCKETS
+        ),
+    )
 
 
 @register(
@@ -691,7 +686,7 @@ def text_inverted_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_inverted_built(spark, sf_dir)
     return phrase_probe(
-        spark, path, _PHRASE[0], _PHRASE[1], n_buckets=_INV_BUCKETS
+        spark, path, _PHRASE[0], _PHRASE[1]
     )
 
 
@@ -1494,7 +1489,7 @@ def text_inverted_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_inverted_built(spark, sf_dir)
     return (
         bm25_probe(
-            spark, path, list(_BM25_IDX_TERMS), n_buckets=_INV_BUCKETS
+            spark, path, list(_BM25_IDX_TERMS)
         )
         .orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
         .limit(10)
@@ -1904,7 +1899,7 @@ def text_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_inverted_built(spark, sf_dir)
     fb = (
-        bm25_probe(spark, path, list(_PRF_SEEDS), n_buckets=_INV_BUCKETS)
+        bm25_probe(spark, path, list(_PRF_SEEDS))
         .orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
         .limit(_PRF_FB_DOCS)
     )
@@ -1966,26 +1961,26 @@ def ensure_inverted_deleted_layout(spark: SparkSession, sf_dir: str) -> str:
     corpus — big enough that hits AND the N/avgdl norms must move).
     Deletes target their own artifact dir so the shared layout stays
     tombstone-free and every other probe keeps its exact plan shape
-    (the ensure_deleted_layout pattern from the IVF tier)."""
-    import os
-
+    (the ensure_deleted_layout pattern from the IVF tier). Built = the
+    init commit plus the tombstone commit."""
     from cnc_visionsearch_spark.operators.text_index import (
         inverted_build,
         inverted_delete,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import (
+        _ARTIFACT_ROOT,
+        _corpus_tag,
+        _ensure_tlog_layout,
+    )
 
     path = (
         f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
         f"/inverted_del_b{_INV_BUCKETS}v3"
     )
-    marker = os.path.join(path, "_DELETED")
-    if not os.path.exists(marker):
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)  # partial tlog builds
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        inverted_build(docs, path, n_buckets=_INV_BUCKETS, use_tlog=True)
+        inverted_build(docs, path, n_buckets=_INV_BUCKETS)
         ids = [
             r.doc_id
             for r in docs.filter(
@@ -1995,8 +1990,8 @@ def ensure_inverted_deleted_layout(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         ]
         inverted_delete(spark, path, ids)
-        open(marker, "w").close()
-    return path
+
+    return _ensure_tlog_layout(path, 2, build)
 
 
 @register(
@@ -2062,7 +2057,7 @@ def text_inverted_delete_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_inverted_deleted_layout(spark, sf_dir)
     return (
         bm25_probe(
-            spark, path, list(_BM25_IDX_TERMS), n_buckets=_INV_BUCKETS
+            spark, path, list(_BM25_IDX_TERMS)
         )
         .orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
         .limit(10)
@@ -2154,7 +2149,6 @@ def text_bm25_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         path,
         [(q, list(ts)) for q, ts in _BM25_BATCH],
-        n_buckets=_INV_BUCKETS,
         k=5,
     )
     return res.orderBy(
@@ -2794,10 +2788,19 @@ def ensure_forget_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
         _corpus_tag,
         _norm_query_vec,
     )
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
     root = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/forget"
     p_ivf, p_sh, p_inv = f"{root}/ivf", f"{root}/shards", f"{root}/inverted"
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    # the inverted part is built once its log holds the init AND the
+    # forget tombstone commit; the IVF/shard parts keep the _BUILT marker
+    if not (
+        os.path.exists(os.path.join(root, "_BUILT"))
+        and TLog(p_inv).latest_version() >= 2
+    ):
+        import shutil
+
+        shutil.rmtree(root, ignore_errors=True)
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, p_ivf, n_cells=8)
         shard_build(emb, p_sh, num_shards=4)
@@ -4168,7 +4171,6 @@ def text_inverted_proximity_topk(
         _PROX_TERMS[0],
         _PROX_TERMS[1],
         window=_PROX_WINDOW,
-        n_buckets=_INV_BUCKETS,
     )
 
 
@@ -4244,7 +4246,7 @@ def text_maxscore_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_inverted_built(spark, sf_dir)
     return maxscore_pruned_topk(
-        spark, path, list(_MAXSCORE_TERMS), k=10, n_buckets=_INV_BUCKETS
+        spark, path, list(_MAXSCORE_TERMS), k=10
     )
 
 

@@ -66,6 +66,22 @@ def _corpus_tag(sf_dir: str, table: str = "embeddings") -> str:
     return f"{base}-{h.hexdigest()[:12]}"
 
 
+def _ensure_tlog_layout(path: str, n_commits: int, build) -> str:
+    """Idempotent build of the transaction-log layout at ``path``: the
+    log holding at least ``n_commits`` commits is the "built" marker
+    (each builder's last step is its final commit). Anything less — an
+    empty or partial log, or a directory from an older layout — is
+    wiped and ``build()`` runs from scratch."""
+    import shutil
+
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    if TLog(path).latest_version() < n_commits:
+        shutil.rmtree(path, ignore_errors=True)
+        build()
+    return path
+
+
 def ensure_ivf_built(spark: SparkSession, sf_dir: str, n_cells: int = 8) -> str:
     """Idempotent IVF build: materialize codebook + cell-partitioned
     layout once per (corpus content, n_cells); return the artifact

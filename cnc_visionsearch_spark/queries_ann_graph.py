@@ -19,13 +19,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.operators.graph_ann import nsw_build, nsw_search_df
+from cnc_visionsearch_spark.operators.graph_ann import (
+    nsw_build,
+    nsw_search_df,
+    read_hnsw_graph,
+    read_nsw_graph,
+)
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.queries_ann import (
     _ARTIFACT_ROOT,
     _L2SQ,
     _NORM_CTE,
     _corpus_tag,
+    _ensure_tlog_layout,
     _norm_query_vec,
 )
 from cnc_visionsearch_spark.registry import register
@@ -43,16 +49,18 @@ _QID = 5  # query vector, same convention as the other ANN tiers
 
 
 def ensure_nsw_built(spark: SparkSession, sf_dir: str, m: int = _M) -> str:
-    """Idempotent NSW build: graph + entries artifacts once per
-    (corpus content, m); returns the layout path."""
+    """Idempotent NSW build: graph + entries once per (corpus content,
+    m) — the init commit is the built marker; returns the layout
+    path."""
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/nsw_m{m}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+
+    def build():
         emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", "nvec"
         )
         nsw_build(emb, path, m=m, n_entries=_ENTRIES)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+
+    return _ensure_tlog_layout(path, 1, build)
 
 
 _GRAPH_CTE = f"""
@@ -111,7 +119,7 @@ FROM graph GROUP BY src ORDER BY src LIMIT 50
 def ann_nsw_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_nsw_built(spark, sf_dir)
     return (
-        spark.read.parquet(f"{path}/graph")
+        read_nsw_graph(spark, path)
         .groupBy(F.col("src").cast("bigint").alias("src"))
         .agg(F.count(F.lit(1)).alias("degree"))
         .orderBy("src")
@@ -241,10 +249,10 @@ FROM b{_HOPS} ORDER BY distance ASC, vec_id ASC LIMIT 10
     "overlapping ones conflict-and-recompute (racing interleave "
     "test-pinned in tests/test_tlog_artifacts.py). Every read (entry "
     "points, per-hop bucket scans) goes through the snapshot's "
-    "log-level file pruning instead of directory listings. The oracle "
+    "log-level file pruning. The oracle "
     "is the SAME unrolled beam replay as ann_nsw_beam_topk — a hash "
     "match proves split-commit + compact + snapshot reads reproduce "
-    "the legacy layout's ranking bit-for-bit.",
+    "the one-shot build's ranking bit-for-bit.",
 )
 def tlog_nsw_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_tlog_nsw_built(spark, sf_dir)
@@ -262,12 +270,14 @@ _HQID = 11
 
 
 def ensure_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent hierarchical build: layered graph + entry artifacts
-    once per corpus content; returns the layout path."""
+    """Idempotent hierarchical build: layered graph + entry once per
+    corpus content — the init commit is the built marker; returns the
+    layout path."""
     from cnc_visionsearch_spark.operators.graph_ann import hnsw_build
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/hnsw_m{_M}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+
+    def build():
         emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", "nvec"
         )
@@ -279,8 +289,8 @@ def ensure_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
             level_mult=_LEVEL_MULT,
             max_level=_MAX_LEVEL,
         )
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+
+    return _ensure_tlog_layout(path, 1, build)
 
 
 def _lv_case() -> str:
@@ -395,7 +405,7 @@ SELECT {l}, CAST(count(DISTINCT src) AS BIGINT),
 )
 def ann_hnsw_layer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_hnsw_built(spark, sf_dir)
-    g = spark.read.parquet(f"{path}/graph")
+    g = read_hnsw_graph(spark, path)
     out = None
     for l in range(0, _MAX_LEVEL + 1):
         cen = g.filter(F.col("layer") == l).agg(
@@ -508,7 +518,6 @@ def ensure_tlog_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
             m_upper=_M_UPPER,
             level_mult=_LEVEL_MULT,
             max_level=_MAX_LEVEL,
-            use_tlog=True,
         )
         _fragment_tlog_hnsw(spark, path)
         run_transaction(lambda: hnsw_compact(spark, path))
@@ -535,18 +544,17 @@ FROM b{_HOPS} ORDER BY distance ASC, vec_id ASC LIMIT 10
     "commit, a fragment rewrite commit splits every (layer, bucket) "
     "conflict domain into two files from the committed bytes (one "
     "evaluation, one source of truth), the ENTRY rides commit META "
-    "instead of a swapped directory — entry promotion is a "
-    "read-modify-write "
+    "— entry promotion is a read-modify-write "
     "meta-key commit, so racing promotions serialize through the "
-    "base_version rebase window (the arbitration the legacy swap "
-    "lacked; promotion + racing interleaves test-pinned in tests/"
+    "base_version rebase window (promotion + racing interleaves "
+    "test-pinned in tests/"
     "test_tlog_artifacts.py) — then hnsw_compact rewrites every "
     "multi-file domain as ONE commit. Reads (entry from snapshot "
     "meta, per-hop (layer, bucket) scans via log-level file pruning) "
-    "replace directory listings at the same plan shape. The oracle is "
+    "keep the same plan shape. The oracle is "
     "the SAME unrolled hierarchy replay as ann_hnsw_descend_topk — a "
     "hash match proves split-commit + meta entry + compact + snapshot "
-    "reads reproduce the legacy ranking bit-for-bit.",
+    "reads reproduce the one-shot build's ranking bit-for-bit.",
 )
 def tlog_hnsw_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.graph_ann import hnsw_search_df

@@ -1535,24 +1535,31 @@ def ensure_token_ivf_built(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent token-vector IVF build (operators/maxsim.
     token_ivf_build) over the documents vocabulary, once per corpus
     content — the PLAID-candidate layout every vector-pruned maxsim
-    probe reads (same artifact discipline as ensure_inverted_built)."""
-    import os
-
+    probe reads (same artifact discipline as ensure_inverted_built:
+    the init commit is the built marker)."""
     from cnc_visionsearch_spark.operators.maxsim import (
         TOKEN_IVF_CELLS,
         token_ivf_build,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import (
+        _ARTIFACT_ROOT,
+        _corpus_tag,
+        _ensure_tlog_layout,
+    )
 
     path = (
         f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
         f"/token_ivf_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
     )
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        docs = load_table(spark, sf_dir, "documents")
-        token_ivf_build(docs, path, n_cells=TOKEN_IVF_CELLS)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+    return _ensure_tlog_layout(
+        path,
+        1,
+        lambda: token_ivf_build(
+            load_table(spark, sf_dir, "documents"),
+            path,
+            n_cells=TOKEN_IVF_CELLS,
+        ),
+    )
 
 
 @register(
@@ -1621,8 +1628,8 @@ LIMIT 10
     "the persisted TOKEN-VECTOR IVF layout (operators/maxsim."
     "token_ivf_build: vocabulary tokens assigned once to nearest-"
     "centroid cells, docs mapped to the cells their tokens occupy, "
-    "doc_cells PARTITIONED BY cell_id so the probe is parquet "
-    "partition pruning), and exact maxsim scores candidates only. "
+    "doc_cells files tagged by cell_id so the probe is log-level "
+    "file pruning), and exact maxsim scores candidates only. "
     "Unlike the lexical twin text_maxsim_pruned_topk, a doc sharing "
     "NO literal query token is still reachable through a same-cell "
     "token — the semantic-match case late interaction exists for. "
@@ -1734,10 +1741,7 @@ ORDER BY qid, score_q DESC, doc_id
 )
 def text_maxsim_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.maxsim import maxsim_multi_probe
-    from cnc_visionsearch_spark.queries_analytics import (
-        _INV_BUCKETS,
-        ensure_inverted_built,
-    )
+    from cnc_visionsearch_spark.queries_analytics import ensure_inverted_built
 
     path = ensure_inverted_built(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
@@ -1746,7 +1750,6 @@ def text_maxsim_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         [(qid, list(ts)) for qid, ts in _MAXSIM_BATCH],
         docs,
-        n_buckets=_INV_BUCKETS,
         k=5,
         min_token_hits="all",
     )
@@ -1866,33 +1869,33 @@ def ensure_token_ivf_appended(spark: SparkSession, sf_dir: str) -> str:
     queries_ann_incremental.ensure_appended_layout): build over the
     base document slice, then append the rest against the frozen
     centroids. Keyed by corpus content, so fixture regeneration
-    rebuilds."""
-    import os
-
+    rebuilds; built = the init commit plus the append commit."""
     from cnc_visionsearch_spark.operators.maxsim import (
         TOKEN_IVF_CELLS,
         token_ivf_append,
         token_ivf_build,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import (
+        _ARTIFACT_ROOT,
+        _corpus_tag,
+        _ensure_tlog_layout,
+    )
 
     path = (
         f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
         f"/token_ivf_append_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
     )
-    marker = os.path.join(path, "_APPENDED")
-    if not os.path.exists(marker):
+
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         token_ivf_build(
             docs.filter(F.col("doc_id") < _TIVF_SPLIT),
             path,
             n_cells=TOKEN_IVF_CELLS,
         )
-        token_ivf_append(
-            docs.filter(F.col("doc_id") >= _TIVF_SPLIT), path
-        )
-        open(marker, "w").close()
-    return path
+        token_ivf_append(docs.filter(F.col("doc_id") >= _TIVF_SPLIT), path)
+
+    return _ensure_tlog_layout(path, 2, build)
 
 
 @register(
@@ -2386,8 +2389,7 @@ _TIVF_DELETED = [2, 150, 420]
 
 
 def ensure_token_ivf_deleted(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent TRANSACTIONAL token-IVF lifecycle: build(base,
-    use_tlog=True) -> append(rest) -> tombstone delete -> vacuum (one
+    """Idempotent token-IVF lifecycle: build(base) -> append(rest) -> tombstone delete -> vacuum (one
     rewrite commit under the optimistic loop). Its own layout — the
     shared appended fixture is never mutated."""
     import os
@@ -2415,7 +2417,6 @@ def ensure_token_ivf_deleted(spark: SparkSession, sf_dir: str) -> str:
             docs.filter(F.col("doc_id") < _TIVF_SPLIT),
             path,
             n_cells=TOKEN_IVF_CELLS,
-            use_tlog=True,
         )
         token_ivf_append(docs.filter(F.col("doc_id") >= _TIVF_SPLIT), path)
         token_ivf_delete(spark, path, _TIVF_DELETED)

@@ -8,12 +8,13 @@ for the highest-churn derived state outside id_mapping.
 
 Each query replays a deterministic lifecycle against a DuckDB oracle
 that recomputes the FINAL state from raw tables — a hash match proves
-the committed mutation chain equals a from-scratch build (the same
-append==rebuild / delete==never-indexed contracts the legacy layouts
-pin, now with concurrent-writer arbitration). Reads go through the
-SAME seams every legacy probe uses (read_postings/read_doclens,
-read_cells/read_codebook, read_minhash_store), so probe semantics are
-mode-invariant by construction. Racing-writer serializability is
+the committed mutation chain equals a from-scratch build (the
+append==rebuild / delete==never-indexed contracts, with
+concurrent-writer arbitration). Reads go through the SAME seams every
+probe uses (read_postings/read_doclens, read_cells/read_codebook,
+read_minhash_store). The inverted index and the MinHash store exist
+only as tlog layouts; the IVF family keeps a legacy layout beside it,
+and its probes are mode-invariant by construction. Racing-writer serializability is
 pinned by tests/test_tlog_artifacts.py (append+vacuum per artifact:
 disjoint domains serialize, overlapping ones raise TLogConflictError
 and recompute).
@@ -69,8 +70,7 @@ def ensure_tlog_inverted(spark: SparkSession, sf_dir: str) -> str:
     """Transactional inverted index lifecycle: build(docs<200) ->
     append(200-250) -> delete 5 ids -> vacuum (one rewrite commit,
     under the optimistic retry loop) -> compact. Every mutation is one
-    atomic tlog commit; probes read through read_postings/read_doclens
-    exactly like legacy layouts."""
+    atomic tlog commit; probes read through read_postings/read_doclens."""
     from cnc_visionsearch_spark.operators.text_index import (
         inverted_append,
         inverted_build,
@@ -89,10 +89,7 @@ def ensure_tlog_inverted(spark: SparkSession, sf_dir: str) -> str:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        inverted_build(
-            docs.filter(F.col("doc_id") < 200), path, n_buckets=16,
-            use_tlog=True,
-        )
+        inverted_build(docs.filter(F.col("doc_id") < 200), path, n_buckets=16)
         inverted_append(
             docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 250)),
             path,
@@ -155,10 +152,9 @@ LIMIT 10
     "with term-bucket conflict domains (appends/deletes blind, "
     "vacuum/compact rewrites that conflict against racing mutations "
     "and recompute — Delta's append-wins arbitration, racing tests in "
-    "tests/test_tlog_artifacts.py). The SAME bm25_probe that serves "
-    "legacy layouts ranks over the committed snapshot (read_postings/"
-    "read_doclens dispatch on the layout mode — probe results are "
-    "mode-invariant); the oracle recomputes BM25 from the surviving "
+    "tests/test_tlog_artifacts.py). The SAME bm25_probe every text "
+    "query uses ranks over the committed snapshot (read_postings/"
+    "read_doclens); the oracle recomputes BM25 from the surviving "
     "raw text, so a hash match proves the five-commit chain equals a "
     "from-scratch build: no resurrection, no stale norms, no torn "
     "reads.",
@@ -636,8 +632,8 @@ def ensure_tlog_minhash_store(spark: SparkSession, sf_dir: str) -> str:
     "id_mapping streaming sink already has, now for a derived "
     "artifact) + compact (dedupe/settle as a rewrite over every band "
     "domain; racing appends conflict it, never the reverse). A hash "
-    "match proves the five-commit store CONTENT equals the legacy "
-    "single-writer build — arbitration added, semantics unchanged.",
+    "match proves the five-commit store CONTENT equals a two-commit "
+    "build — arbitration added, semantics unchanged.",
 )
 def tlog_minhash_store_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.dedup import (

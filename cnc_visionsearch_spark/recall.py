@@ -279,20 +279,24 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
     # the driver-side replay runs the identical beam-search semantics
     # over the persisted graph (numpy distances are measurement-only;
     # the hash gate pins exactness separately)
-    from cnc_visionsearch_spark.operators.ann import _metadata_rows
+    from cnc_visionsearch_spark.operators.graph_ann import (
+        _entry_rows,
+        _hnsw_entry,
+        read_hnsw_graph,
+        read_nsw_graph,
+    )
     from cnc_visionsearch_spark.queries_ann_graph import (
         _EF,
         _HOPS,
         ensure_nsw_built,
     )
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
     npath = ensure_nsw_built(spark, sf_dir)
     adj: dict[int, list[int]] = {}
-    for r in spark.read.parquet(f"{npath}/graph").select("src", "dst").collect():
+    for r in read_nsw_graph(spark, npath).select("src", "dst").collect():
         adj.setdefault(int(r.src), []).append(int(r.dst))
-    entry_ids = [
-        int(e["vec_id"]) for e in _metadata_rows(f"{npath}/entries")
-    ]
+    entry_ids = [int(e["vec_id"]) for e in _entry_rows(npath)]
     idx_of = {int(i): n for n, i in enumerate(ids.tolist())}
 
     def nsw_recall(q, ef: int, hops: int) -> float:
@@ -330,16 +334,12 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
 
     hpath = ensure_hnsw_built(spark, sf_dir)
     hadj: dict[int, dict[int, list[int]]] = {}
-    for r in (
-        spark.read.parquet(f"{hpath}/graph")
-        .select("layer", "src", "dst")
-        .collect()
-    ):
+    for r in read_hnsw_graph(spark, hpath).select("layer", "src", "dst").collect():
         hadj.setdefault(int(r.layer), {}).setdefault(int(r.src), []).append(
             int(r.dst)
         )
-    he = spark.read.parquet(f"{hpath}/entry").first()
-    h_entry, h_lvl = int(he["vec_id"]), int(he["level"])
+    he = _hnsw_entry(TLog(hpath).snapshot())
+    h_entry, h_lvl = he["vec_id"], he["level"]
 
     def hnsw_recall(q, ef: int, hops: int) -> float:
         def dist(i: int) -> float:

@@ -205,15 +205,12 @@ def search_by_text_lexical(
     retrieval pair production search serves. Returns
     (doc_id, n_terms, score_q) best-first."""
     from cnc_visionsearch_spark.operators.text_index import bm25_probe
-    from cnc_visionsearch_spark.queries_analytics import (
-        _INV_BUCKETS,
-        ensure_inverted_built,
-    )
+    from cnc_visionsearch_spark.queries_analytics import ensure_inverted_built
 
     terms = sorted({t for t in query_text.split(" ") if t})
     path = ensure_inverted_built(spark, sf_dir)
     return (
-        bm25_probe(spark, path, terms, n_buckets=_INV_BUCKETS)
+        bm25_probe(spark, path, terms)
         .orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
         .limit(top_k)
     )

@@ -78,8 +78,11 @@ __all__ = [
 
 def tlog_of(path: str) -> "TLog | None":
     """Handle on ``path`` when it is a transactional table (its
-    ``_tlog/`` dir exists), else None — the mode dispatch the dual-mode
-    artifact layers (inverted index, IVF, MinHash store) share."""
+    ``_tlog/`` dir exists), else None — the layout dispatch of the IVF
+    family (cells, PQ codes, codebook, shards), the one tier that still
+    keeps a legacy tmp+rename layout beside the log. Every other
+    mutable artifact is a transactional table only and opens
+    :class:`TLog` directly."""
     if os.path.isdir(os.path.join(path, _LOG_DIR)):
         return TLog(path)
     return None

@@ -391,22 +391,22 @@ def inverted_ingest_stream(
     in_path: str,
     index_path: str,
     checkpoint: str,
-    n_buckets: int = 16,
+    *,
     max_files_per_trigger: int = 10,
 ):
     """Streaming ingest for the inverted text index: each micro-batch
     of new documents gets its postings computed (batch-local group-by —
     a document arrives whole, so its postings are complete within the
-    batch) and appended into the term-bucket-partitioned layout that
-    phrase probes prune. The text-tier twin of ivf_ingest_stream:
-    probes launched after any committed batch see the new documents at
-    unchanged pruned cost; resident files are never rewritten. Returns
-    the started StreamingQuery.
+    batch) and appended into the term-bucket-tagged layout that phrase
+    probes prune. The text-tier twin of ivf_ingest_stream: probes
+    launched after any committed batch see the new documents at
+    unchanged pruned cost; resident files are never rewritten. Ingest
+    is EXACTLY-ONCE: each commit carries the txn key (run id, batch
+    id), so an at-least-once foreachBatch replay commits nothing (the
+    tlog_upsert_stream doctrine — idempotence in the TABLE's
+    protocol). Returns the started StreamingQuery.
     """
-    from cnc_visionsearch_spark.operators.text_index import (
-        _tlog_of,
-        inverted_append,
-    )
+    from cnc_visionsearch_spark.operators.text_index import inverted_append
     from cnc_visionsearch_spark.schemas import DOCUMENTS
 
     stream = (
@@ -414,7 +414,6 @@ def inverted_ingest_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(in_path)
     )
-    is_tlog = _tlog_of(index_path) is not None
     _rid: dict = {}
 
     def _run_id() -> str:
@@ -422,14 +421,10 @@ def inverted_ingest_stream(
             _rid["v"] = _stream_run_id(checkpoint, path_hash_fallback=False)
         return _rid["v"]
 
-    def apply_batch(batch_df, _batch_id):
-        # TRANSACTIONAL layouts get exactly-once ingest: the commit's
-        # txn key (run id, batch id) makes at-least-once foreachBatch
-        # replays commit nothing (the tlog_upsert_stream doctrine —
-        # idempotence in the TABLE's protocol). Legacy layouts keep
-        # the documented at-least-once append.
-        txn = (f"inv_ingest:{_run_id()}", _batch_id) if is_tlog else None
-        inverted_append(batch_df, index_path, n_buckets=n_buckets, txn=txn)
+    def apply_batch(batch_df, batch_id):
+        inverted_append(
+            batch_df, index_path, txn=(f"inv_ingest:{_run_id()}", batch_id)
+        )
 
     return (
         stream.writeStream.foreachBatch(apply_batch)
@@ -759,7 +754,7 @@ def bm25_serving_stream(
     out_path: str,
     checkpoint: str,
     k: int = 5,
-    n_buckets: int = 16,
+    *,
     max_files_per_trigger: int = 10,
 ):
     """Streaming lexical serving — the text twin of
@@ -806,9 +801,7 @@ def bm25_serving_stream(
         queries = [
             (r.qid, list(r.terms)) for r in batch_df.collect()
         ]  # bounded: one row per query in the micro-batch
-        bm25_multi_probe(
-            s, index_path, queries, n_buckets=n_buckets, k=k
-        ).write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
+        bm25_multi_probe(s, index_path, queries, k=k).write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
 
     return (
         stream.writeStream.foreachBatch(apply_batch)
@@ -825,7 +818,7 @@ def maxsim_serving_stream(
     out_path: str,
     checkpoint: str,
     k: int = 5,
-    n_buckets: int = 16,
+    *,
     max_files_per_trigger: int = 10,
     min_token_hits="all",
 ):
@@ -878,7 +871,6 @@ def maxsim_serving_stream(
             index_path,
             queries,
             docs,
-            n_buckets=n_buckets,
             k=k,
             # default matches text_maxsim_batch_topk's r9 operating
             # point (conjunction candidates) so online and batch
@@ -906,8 +898,8 @@ def token_ivf_ingest_stream(
     hnsw_ingest_stream: each micro-batch of documents runs
     ``token_ivf_append`` (new docs' tokens assigned against the
     FROZEN build-time centroids, unseen tokens extend the vocabulary
-    table, new (cell, doc) rows land as new files in their cell
-    partitions — resident files byte-untouched). Probes launched
+    table, new (cell, doc) rows land as new cell-tagged files —
+    resident files byte-untouched). Probes launched
     after any commit reach the new docs through the appended
     partitions at unchanged scan shape; per-batch work is O(batch).
     Returns the configured DataStreamWriter — call ``.start()``."""
@@ -959,13 +951,13 @@ def hnsw_ingest_stream(
     :func:`operators.graph_ann.hnsw_append` — every node draws its
     hash level, descends, finds neighbors BY SEARCHING each layer, and
     appends out+back edges into the touched (layer, bucket)
-    partitions; a node that out-levels the current entry promotes the
-    entry artifact between batches. Searches launched after any commit
+    domains; a node that out-levels the current entry promotes the
+    entry in commit meta between batches. Searches launched after any commit
     reach the new nodes through the appended edges at unchanged scan
     cost. Per-batch work is O(batch) index searches — the insert cost
     profile HNSW itself has — so keep micro-batches small relative to
     serving load; edge-file accretion compacts via the normal
-    maintenance pass like every other append layout.
+    compaction (:func:`operators.graph_ann.hnsw_compact`).
 
     Returns the configured DataStreamWriter — call ``.start()``.
     """

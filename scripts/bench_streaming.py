@@ -121,7 +121,6 @@ def measure(spark, sf_dir, ivf_path, inv_path) -> dict:
             f"{work}/bm25_out",
             f"{work}/bm25_ckpt",
             k=5,
-            n_buckets=16,
             max_files_per_trigger=1,
         ).start()
         q2.awaitTermination(600)
@@ -152,7 +151,6 @@ def measure(spark, sf_dir, ivf_path, inv_path) -> dict:
             f"{work}/maxsim_out",
             f"{work}/maxsim_ckpt",
             k=5,
-            n_buckets=16,
             max_files_per_trigger=1,
         ).start()
         q2b.awaitTermination(600)

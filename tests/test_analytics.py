@@ -75,36 +75,24 @@ def test_phrase_probe_prunes_buckets_and_matches_rescan(spark):
     filter as a PartitionFilter on the postings scan and (b) agree
     with a from-scratch corpus rescan for an arbitrary other phrase."""
     from cnc_visionsearch_spark.operators.text_index import phrase_probe
-    from cnc_visionsearch_spark.plans import formatted_plan
     from cnc_visionsearch_spark.queries_analytics import (
         _INV_BUCKETS,
         ensure_inverted_built,
     )
 
     path = ensure_inverted_built(spark, SF)
-    probe = phrase_probe(spark, path, "slow", "fast", n_buckets=_INV_BUCKETS)
-    # mode-aware pruning evidence (tests/test_plans._assert_bucket_pruned
-    # doctrine): on the transactional layout the proof is the scan's
-    # ACTUAL file set — only the two terms' _tb= domain files enter;
-    # on a legacy layout it is the hive PartitionFilters line
+    probe = phrase_probe(spark, path, "slow", "fast")
+    # pruning evidence (tests/test_plans._assert_bucket_pruned
+    # doctrine): the scan's ACTUAL file set — only the two terms' _tb=
+    # domain files enter
     from cnc_visionsearch_spark.operators.text_index import term_bucket
 
     files = probe.inputFiles()
     tb = sorted(
         {int(f.split("_tb=")[1].split("/")[0]) for f in files if "_tb=" in f}
     )
-    if tb:
-        want = {
-            term_bucket(t, _INV_BUCKETS) for t in ("slow", "fast")
-        }
-        assert set(tb) <= want, (tb, want)
-    else:
-        pf = [
-            ln
-            for ln in formatted_plan(probe).splitlines()
-            if "PartitionFilters" in ln
-        ]
-        assert pf and any("bucket" in ln and "IN (" in ln for ln in pf)
+    want = {term_bucket(t, _INV_BUCKETS) for t in ("slow", "fast")}
+    assert tb and set(tb) <= want, (tb, want)
 
     docs = load_table(spark, SF, "documents")
     sp = F.split("text", " ")
@@ -176,7 +164,7 @@ def test_maintenance_compacts_inverted_and_nsw_layouts(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     inv = str(tmp_path / "inv")
     inverted_build(docs.filter(F.col("doc_id") % 2 == 0), inv, n_buckets=4)
-    inverted_append(docs.filter(F.col("doc_id") % 2 == 1), inv, n_buckets=4)
+    inverted_append(docs.filter(F.col("doc_id") % 2 == 1), inv)
 
     emb = with_normalized(load_table(spark, SF, "embeddings")).select(
         "vec_id", "nvec"
@@ -190,7 +178,7 @@ def test_maintenance_compacts_inverted_and_nsw_layouts(spark, tmp_path):
     q = [float(x) for x in emb.filter(F.col("vec_id") == 3).first().nvec]
     probe_before = {
         (r.doc_id, r.n_occurrences)
-        for r in phrase_probe(spark, inv, "slow", "fast", n_buckets=4).collect()
+        for r in phrase_probe(spark, inv, "slow", "fast").collect()
     }
     nsw_before = nsw_search(spark, nsw, q, k=5)
 
@@ -202,7 +190,7 @@ def test_maintenance_compacts_inverted_and_nsw_layouts(spark, tmp_path):
 
     probe_after = {
         (r.doc_id, r.n_occurrences)
-        for r in phrase_probe(spark, inv, "slow", "fast", n_buckets=4).collect()
+        for r in phrase_probe(spark, inv, "slow", "fast").collect()
     }
     assert probe_after == probe_before
     assert nsw_search(spark, nsw, q, k=5) == nsw_before
@@ -234,20 +222,23 @@ def test_inverted_delete_no_resurrection_and_resident_files_untouched(
 
     def digest():
         out = {}
-        for f in sorted(glob.glob(f"{idx}/postings/**/*.parquet", recursive=True)):
+        for f in sorted(glob.glob(f"{idx}/data/**/*.parquet", recursive=True)):
             out[f] = hashlib.md5(open(f, "rb").read()).hexdigest()
         return out
 
     before_files = digest()
-    full = bm25_probe(spark, idx, ["hash", "join"], n_buckets=4)
+    full = bm25_probe(spark, idx, ["hash", "join"])
     full_ids = {r.doc_id for r in full.collect()}
     victims = sorted(full_ids)[:3]
     inverted_delete(spark, idx, victims)
 
-    after = bm25_probe(spark, idx, ["hash", "join"], n_buckets=4)
+    after = bm25_probe(spark, idx, ["hash", "join"])
     after_ids = {r.doc_id for r in after.collect()}
     assert not (after_ids & set(victims)), "deleted doc resurrected"
-    assert digest() == before_files, "delete rewrote resident files"
+    after_files = digest()
+    assert before_files and all(
+        after_files.get(f) == h for f, h in before_files.items()
+    ), "delete rewrote resident files"
     # norms shift: N excludes tombstoned docs
     n_live = read_doclens(spark, idx).count()
     assert n_live == docs.count() - len(victims)
@@ -256,21 +247,21 @@ def test_inverted_delete_no_resurrection_and_resident_files_untouched(
 def test_inverted_vacuum_preserves_results_and_drops_tombstones(
     spark, tmp_path
 ):
-    """Physical delete: vacuum rewrites only tombstone-touched bucket
-    partitions + the doclens table, drops the tombstone dir, and every
-    probe result is bit-identical before/after (the anti-join had
-    already hidden the rows)."""
-    import os
-
+    """Physical delete: vacuum rewrites only tombstone-touched buckets
+    + the doclens table, drops the tombstone files, and every probe
+    result is bit-identical before/after (the anti-join had already
+    hidden the rows)."""
     from pyspark.sql import functions as F
 
     from cnc_visionsearch_spark.operators.text_index import (
+        TLOG_TOMBS_TAG,
         bm25_probe,
         inverted_build,
         inverted_delete,
         inverted_vacuum,
     )
     from cnc_visionsearch_spark.sources.catalog import load_table
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
     docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 120)
     idx = str(tmp_path / "inv")
@@ -279,17 +270,18 @@ def test_inverted_vacuum_preserves_results_and_drops_tombstones(
 
     before = sorted(
         (r.doc_id, r.n_terms, r.score_q)
-        for r in bm25_probe(spark, idx, ["hash", "join"], n_buckets=4).collect()
+        for r in bm25_probe(spark, idx, ["hash", "join"]).collect()
     )
     inverted_vacuum(spark, idx)
-    assert not os.path.exists(f"{idx}/tombstones")
+    assert not TLog(idx).snapshot().files_in([TLOG_TOMBS_TAG])
     after = sorted(
         (r.doc_id, r.n_terms, r.score_q)
-        for r in bm25_probe(spark, idx, ["hash", "join"], n_buckets=4).collect()
+        for r in bm25_probe(spark, idx, ["hash", "join"]).collect()
     )
     assert before == after and before
-    # physically gone: raw reads no longer contain the ids
-    raw = spark.read.parquet(f"{idx}/postings").filter(
+    # physically gone: raw reads (no tombstone filter) no longer
+    # contain the ids
+    raw = TLog(idx).read(spark, buckets=range(4)).filter(
         F.col("doc_id").isin([4, 11, 25])
     )
     assert raw.count() == 0
@@ -390,58 +382,6 @@ def test_bloom_words_distributed_build_matches_python_fold(spark):
     assert src.count(".collect()") == 1 and "bit_or" in src
 
 
-def test_inverted_vacuum_self_heals_crashed_swap(spark, tmp_path):
-    """Crash-safety of the vacuum swap: simulate every crash window of
-    _swap_in (a .vacuum_bak with no live dir = died between renames; a
-    leftover .vacuum_tmp beside a live dir = died before the swap) and
-    assert the next vacuum entry restores a probe-identical index
-    instead of losing the partition."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from cnc_visionsearch_spark.operators.text_index import (
-        bm25_probe,
-        inverted_build,
-        inverted_vacuum,
-    )
-    from cnc_visionsearch_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 120)
-    idx = str(tmp_path / "inv")
-    inverted_build(docs, idx, n_buckets=4)
-
-    def probe():
-        return sorted(
-            (r.doc_id, r.n_terms, r.score_q)
-            for r in bm25_probe(
-                spark, idx, ["hash", "join"], n_buckets=4
-            ).collect()
-        )
-
-    expected = probe()
-    assert expected
-
-    # crash window 1: died between rename(live->bak) and rename(tmp->live)
-    part = next(
-        f"{idx}/postings/{d}"
-        for d in os.listdir(f"{idx}/postings")
-        if d.startswith("bucket=")
-    )
-    shutil.copytree(part, part + ".vacuum_tmp")
-    os.rename(part, part + ".vacuum_bak")
-    shutil.rmtree(part + ".vacuum_tmp")  # tmp swap-in also never happened
-    inverted_vacuum(spark, idx)  # no tombstones: heal-only entry
-    assert probe() == expected, "bak-without-live not restored"
-
-    # crash window 2: died after writing tmp, before any rename
-    shutil.copytree(part, part + ".vacuum_tmp")
-    inverted_vacuum(spark, idx)
-    assert not os.path.exists(part + ".vacuum_tmp")
-    assert probe() == expected, "leftover tmp corrupted the index"
-
-
 def test_bm25_single_and_batch_probes_cannot_drift(spark, tmp_path):
     """bm25_multi_probe shares per-(term, doc) scores across queries;
     for a one-query batch its ranking and quantized scores must equal
@@ -463,7 +403,7 @@ def test_bm25_single_and_batch_probes_cannot_drift(spark, tmp_path):
 
     single = {
         (r.doc_id, r.n_terms, r.score_q)
-        for r in bm25_probe(spark, idx, terms, n_buckets=8)
+        for r in bm25_probe(spark, idx, terms)
         .orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
         .limit(5)
         .collect()
@@ -471,7 +411,7 @@ def test_bm25_single_and_batch_probes_cannot_drift(spark, tmp_path):
     batch = {
         (r.doc_id, r.n_terms, r.score_q)
         for r in bm25_multi_probe(
-            spark, idx, [(0, terms)], n_buckets=8, k=5
+            spark, idx, [(0, terms)], k=5
         ).collect()
     }
     assert single == batch and single
@@ -487,7 +427,6 @@ def test_maxscore_pruning_is_lossless_and_actually_prunes(spark):
         maxscore_pruned_topk,
     )
     from cnc_visionsearch_spark.queries_analytics import (
-        _INV_BUCKETS,
         _MAXSCORE_TERMS,
         ensure_inverted_built,
     )
@@ -500,11 +439,10 @@ def test_maxscore_pruning_is_lossless_and_actually_prunes(spark):
         path,
         list(_MAXSCORE_TERMS),
         k=10,
-        n_buckets=_INV_BUCKETS,
         introspect=info,
     ).collect()
     plain = (
-        bm25_probe(spark, path, list(_MAXSCORE_TERMS), n_buckets=_INV_BUCKETS)
+        bm25_probe(spark, path, list(_MAXSCORE_TERMS))
         .orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
         .limit(10)
         .collect()

@@ -10,17 +10,25 @@ import pytest
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.maxsim import (
+    TLOG_TIVF_TOKENS_TAG,
     TOKEN_IVF_CELLS,
     doc_distinct_tokens,
     li_token_vec_py,
     maxsim_multi_probe,
+    read_doc_cells,
     token_ivf_build,
     token_ivf_candidates,
     token_ivf_probe_cells,
 )
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import TLog
 
 SF = "/root/testdata/sf0.001"
+
+
+def _token_cells(spark, path):
+    """The layout's (tok, cell_id) vocabulary-assignment table."""
+    return TLog(path).read(spark, buckets=[TLOG_TIVF_TOKENS_TAG])
 
 
 @pytest.fixture(scope="module")
@@ -40,26 +48,30 @@ def test_token_ivf_build_deterministic(spark, built, tmp_path):
     token_ivf_build(docs, other, n_cells=TOKEN_IVF_CELLS)
     a = sorted(
         (r.tok, r.cell_id)
-        for r in spark.read.parquet(f"{built}/token_cells").collect()
+        for r in _token_cells(spark, built).collect()
     )
     b = sorted(
         (r.tok, r.cell_id)
-        for r in spark.read.parquet(f"{other}/token_cells").collect()
+        for r in _token_cells(spark, other).collect()
     )
     assert a == b and len(a) > 0
 
 
 def test_doc_cells_probe_is_partition_pruned(spark, built):
-    """The candidate read must prune doc_cells partitions: the scan's
-    partition filters carry the probed cell ids, so at 100 TB the
+    """The candidate read must prune doc_cells files: the scan's input
+    files are exactly the probed cells' tagged files, so at 100 TB the
     probe reads nprobe/n_cells of the files, never the table."""
     cand = token_ivf_candidates(spark, built, ["vector", "hash"], nprobe=2)
-    plan = cand._sc is None or cand._jdf.queryExecution().executedPlan().toString()
     cells = token_ivf_probe_cells(spark, built, ["vector", "hash"], nprobe=2)
     assert 0 < len(cells) < TOKEN_IVF_CELLS
-    assert "PartitionFilters: [cell_id" in plan or "cell_id#" in plan
+    scanned = {
+        int(f.split("_tb=")[1].split("/")[0])
+        for f in cand.inputFiles()
+        if "_tb=" in f
+    }
+    assert scanned and scanned <= set(cells)
     # ground truth: candidates == docs holding >= 1 token of a probed cell
-    tc = spark.read.parquet(f"{built}/token_cells").filter(
+    tc = _token_cells(spark, built).filter(
         F.col("cell_id").isin(cells)
     )
     docs = load_table(spark, SF, "documents")
@@ -102,7 +114,7 @@ def test_vector_candidates_reach_docs_lexical_pruning_cannot(
     qcells = token_ivf_probe_cells(spark, path, [qtok], nprobe=1)
     partners = [
         r.tok
-        for r in spark.read.parquet(f"{path}/token_cells")
+        for r in _token_cells(spark, path)
         .filter(F.col("cell_id").isin(qcells) & (F.col("tok") != qtok))
         .collect()
     ]
@@ -130,7 +142,7 @@ def test_maxsim_multi_probe_batch_equals_per_query(spark, tmp_path):
     batch = {
         (r.qid, r.doc_id, r.score_q)
         for r in maxsim_multi_probe(
-            spark, path, qs, docs, n_buckets=8, k=5
+            spark, path, qs, docs, k=5
         ).collect()
     }
     single = set()
@@ -138,7 +150,7 @@ def test_maxsim_multi_probe_batch_equals_per_query(spark, tmp_path):
         single |= {
             (r.qid, r.doc_id, r.score_q)
             for r in maxsim_multi_probe(
-                spark, path, [(qid, ts)], docs, n_buckets=8, k=5
+                spark, path, [(qid, ts)], docs, k=5
             ).collect()
         }
     assert batch == single and batch
@@ -161,10 +173,10 @@ def test_maxsim_multi_probe_broadcast_hint_is_adaptive(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        small = maxsim_multi_probe(spark, path, qs, docs, n_buckets=8, k=5)
+        small = maxsim_multi_probe(spark, path, qs, docs, k=5)
         plan_small = small._jdf.queryExecution().executedPlan().toString()
         big = maxsim_multi_probe(
-            spark, path, qs, docs, n_buckets=8, k=5, broadcast_max_rows=0
+            spark, path, qs, docs, k=5, broadcast_max_rows=0
         )
         plan_big = big._jdf.queryExecution().executedPlan().toString()
         # under the bound the candidate set is hinted on both its join
@@ -209,13 +221,13 @@ def test_maxsim_multi_probe_vocab_dots_auto_split(spark, tmp_path):
     unsplit = {
         (r.qid, r.doc_id, r.score_q)
         for r in maxsim_multi_probe(
-            spark, path, qs, docs, n_buckets=8, k=5
+            spark, path, qs, docs, k=5
         ).collect()
     }
     split = {
         (r.qid, r.doc_id, r.score_q)
         for r in maxsim_multi_probe(
-            spark, path, qs, docs, n_buckets=8, k=5, vocab_dots_max_rows=1
+            spark, path, qs, docs, k=5, vocab_dots_max_rows=1
         ).collect()
     }
     assert split == unsplit and split
@@ -241,7 +253,7 @@ def test_maxsim_multi_probe_leaves_no_cache_entry(spark, tmp_path):
     spark.catalog.clearCache()
     assert cm.isEmpty()
     rows = maxsim_multi_probe(
-        spark, path, [(0, ["vector", "window"])], docs, n_buckets=8, k=5
+        spark, path, [(0, ["vector", "window"])], docs, k=5
     ).collect()
     assert rows
     assert cm.isEmpty(), (
@@ -284,8 +296,7 @@ def test_maxsim_multi_probe_token_ivf_candidates(spark, built):
 
 def test_token_ivf_append_frozen_codebook(spark, tmp_path):
     """Append contract (St4): appended docs' tokens assign against the
-    FROZEN build-time centroids; resident doc_cells files stay
-    byte-untouched; probes over the appended layout see exactly the
+    FROZEN build-time centroids; resident files stay byte-untouched; probes over the appended layout see exactly the
     union candidate set of the frozen-codebook rule."""
     import os
 
@@ -306,15 +317,15 @@ def test_token_ivf_append_frozen_codebook(spark, tmp_path):
                     out[p] = (os.path.getsize(p), os.path.getmtime(p))
         return out
 
-    before = files("doc_cells")
+    before = files("data")
     token_ivf_append(rest, path)
-    after = files("doc_cells")
+    after = files("data")
     assert set(before) <= set(after) and len(after) > len(before)
     for p, sig in before.items():
         assert after[p] == sig  # resident files byte-untouched
     # union candidate set == frozen-codebook ground truth
     cells = token_ivf_probe_cells(spark, path, ["vector"], nprobe=2)
-    tc = spark.read.parquet(f"{path}/token_cells").filter(
+    tc = _token_cells(spark, path).filter(
         F.col("cell_id").isin(cells)
     )
     want = {
@@ -406,13 +417,13 @@ def test_token_ivf_ingest_divergent_redelivery_deterministic(
     )
     a = sorted(
         (r.cell_id, r.doc_id)
-        for r in spark.read.parquet(f"{streamed}/doc_cells")
+        for r in read_doc_cells(spark, streamed)
         .filter(F.col("doc_id") == 9001)
         .collect()
     )
     b = sorted(
         (r.cell_id, r.doc_id)
-        for r in spark.read.parquet(f"{oneshot}/doc_cells")
+        for r in read_doc_cells(spark, oneshot)
         .filter(F.col("doc_id") == 9001)
         .collect()
     )
@@ -484,14 +495,14 @@ def test_maxsim_fused_reduction_matches_two_stage(spark, tmp_path, monkeypatch):
     fused = {
         (r.qid, r.doc_id, r.score_q)
         for r in maxsim_multi_probe(
-            spark, path, qs, docs, n_buckets=8, k=5
+            spark, path, qs, docs, k=5
         ).collect()
     }
     monkeypatch.setattr(mx, "MAXSIM_FUSED_QTOK_MAX", 0)
     two_stage = {
         (r.qid, r.doc_id, r.score_q)
         for r in maxsim_multi_probe(
-            spark, path, qs, docs, n_buckets=8, k=5
+            spark, path, qs, docs, k=5
         ).collect()
     }
     assert fused == two_stage and fused
@@ -508,7 +519,7 @@ def test_maxsim_multi_probe_empty_token_lists(spark, tmp_path):
     path = str(tmp_path / "inv_empty")
     inverted_build(docs, path, n_buckets=8)
     out = maxsim_multi_probe(
-        spark, path, [(0, []), (1, [])], docs, n_buckets=8, k=5
+        spark, path, [(0, []), (1, [])], docs, k=5
     )
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["qid", "doc_id", "score_q"]

@@ -1,10 +1,9 @@
 """Single-writer enforcement for non-transactional layouts (r9
-verdict #7 / "What's missing #2"): the NSW/HNSW graph and shard
-layouts stay on tmp+rename (low churn — the scope decision SCALE.md
-records), but their mutation paths now REFUSE concurrent mutation via
-an advisory create-exclusive lock (operators/mutex.py) instead of
-silently interleaving writes. These tests pin the lock mechanics and
-that the append paths actually enforce it."""
+verdict #7 / "What's missing #2"): the IVF family's legacy tmp+rename
+layouts (the shard tier, the shared vacuum rewrite) REFUSE concurrent
+mutation via an advisory create-exclusive lock (operators/mutex.py)
+instead of silently interleaving writes. These tests pin the lock
+mechanics and that the mutation paths actually enforce it."""
 
 from __future__ import annotations
 
@@ -134,46 +133,6 @@ def test_error_message_names_the_holder(tmp_path):
                 pass  # pragma: no cover
         assert "compact" in str(ei.value)
         assert str(os.getpid()) in str(ei.value)
-
-
-def test_nsw_append_refuses_concurrent_mutation(spark, tmp_path):
-    """The graph append path enforces the lock: with another writer
-    holding it, nsw_append raises LayoutBusyError BEFORE touching any
-    file; after release the same append succeeds and is searchable."""
-    from cnc_visionsearch_spark.operators.graph_ann import (
-        nsw_append,
-        nsw_build,
-        nsw_search,
-    )
-    from cnc_visionsearch_spark.operators.knn import with_normalized
-    from cnc_visionsearch_spark.sources.catalog import load_table
-
-    emb = with_normalized(
-        load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    ).select("vec_id", "nvec")
-    path = str(tmp_path / "nsw")
-    nsw_build(emb, path, m=4, n_buckets=4, n_entries=2)
-    base = [float(x) for x in emb.select("nvec").first()[0]]
-    new = spark.createDataFrame(
-        [(10_000, base)], "vec_id bigint, nvec array<double>"
-    )
-
-    def graph_sig():
-        out = {}
-        for root, _d, fs in os.walk(os.path.join(path, "graph")):
-            for f in fs:
-                fp = os.path.join(root, f)
-                out[fp] = os.path.getsize(fp)
-        return out
-
-    before = graph_sig()
-    with layout_mutation_lock(path, "concurrent-compact"):
-        with pytest.raises(LayoutBusyError, match="single-writer"):
-            nsw_append(spark, path, new)
-    assert graph_sig() == before  # refused append wrote NOTHING
-    nsw_append(spark, path, new)  # lock released: append lands
-    ids = [i for i, _ in nsw_search(spark, path, base, k=5, ef=16, hops=3)]
-    assert 10_000 in ids
 
 
 def test_shard_append_and_vacuum_refuse_concurrent_mutation(

@@ -549,29 +549,23 @@ def test_monthly_rollup_serves_from_daily_artifact(spark, queries):
 
 def _tb_values(files):
     """Distinct _tb= domain tags in a transactional layout's scanned
-    file set ([] on legacy layouts — their paths carry bucket= hive
-    dirs instead)."""
+    file set."""
     return sorted(
         {int(f.split("_tb=")[1].split("/")[0]) for f in files if "_tb=" in f}
     )
 
 
 def _assert_bucket_pruned(df, n_buckets=16, expect=None):
-    """Mode-aware pruning evidence for inverted-layout probes. On a
-    TRANSACTIONAL layout the proof is the scan's ACTUAL FILE SET (the
-    log-tag selection already excluded other buckets' files — stronger
-    than a filter string); on a legacy layout it is the hive
-    PartitionFilters bucket IN (...) line."""
+    """Pruning evidence for inverted-layout probes: the scan's ACTUAL
+    FILE SET (the log-tag selection already excluded other buckets'
+    files — stronger than a filter string)."""
     files = df.inputFiles()
     assert files and all("inverted" in f for f in files)
     tb = _tb_values(files)
-    if tb:
-        if expect is not None:
-            assert set(tb) <= set(expect), (tb, expect)
-        assert len(tb) < n_buckets, tb  # proper subset == pruned scan
-        return
-    pf = [ln for ln in plan_of(df).splitlines() if "PartitionFilters" in ln]
-    assert pf and any("bucket" in ln and "IN (" in ln for ln in pf)
+    assert tb
+    if expect is not None:
+        assert set(tb) <= set(expect), (tb, expect)
+    assert len(tb) < n_buckets, tb  # proper subset == pruned scan
 
 
 def test_inverted_phrase_probe_schema_is_postings_only(spark, queries):
@@ -596,14 +590,10 @@ def test_inverted_bm25_probe_reads_index_only(spark, queries):
     df = queries["text_inverted_bm25_topk"](spark, SF)
     files = df.inputFiles()
     assert files and all("inverted" in f for f in files)
-    if _tb_values(files):
-        # transactional layout: postings files carry _tb= domain dirs,
-        # the doclens norms file is untagged — both subtables present
-        assert any("_tb=" in f for f in files)
-        assert any("_tb=" not in f for f in files)
-    else:
-        assert any("doclens" in f for f in files)
-        assert any("postings" in f for f in files)
+    # postings files carry _tb= domain dirs, the doclens norms file is
+    # untagged — both subtables present
+    assert any("_tb=" in f for f in files)
+    assert any("_tb=" not in f for f in files)
     _assert_bucket_pruned(df)
 
 
@@ -742,7 +732,6 @@ def test_maxscore_and_ql_probes_read_index_only(spark, queries):
         maxscore_pruned_topk,
     )
     from cnc_visionsearch_spark.queries_analytics import (
-        _INV_BUCKETS,
         _MAXSCORE_TERMS,
         ensure_inverted_built,
     )
@@ -763,7 +752,6 @@ def test_maxscore_and_ql_probes_read_index_only(spark, queries):
         path,
         list(_MAXSCORE_TERMS),
         k=10,
-        n_buckets=_INV_BUCKETS,
         introspect=info,
     )
     _assert_index_only(info["scored_slice"], "text_maxscore_pruned_topk")

@@ -869,7 +869,7 @@ def test_inverted_ingest_stream_extends_postings(spark, tmp_path):
 
     def file_sizes(root):
         out = {}
-        for dirpath, _dirs, files in os.walk(f"{root}/postings"):
+        for dirpath, _dirs, files in os.walk(f"{root}/data"):
             for f in files:
                 if f.endswith(".parquet"):
                     p = os.path.join(dirpath, f)
@@ -879,8 +879,7 @@ def test_inverted_ingest_stream_extends_postings(spark, tmp_path):
     before = file_sizes(idx)
     stream_dir = _write_chunks(spark, str(tmp_path), chunks)
     q = inverted_ingest_stream(
-        spark, stream_dir, idx, str(tmp_path / "ckpt_inv"),
-        n_buckets=8, max_files_per_trigger=1,
+        spark, stream_dir, idx, str(tmp_path / "ckpt_inv"), max_files_per_trigger=1,
     )
     q.awaitTermination(120)
 
@@ -889,7 +888,7 @@ def test_inverted_ingest_stream_extends_postings(spark, tmp_path):
     for p, sz in before.items():
         assert after[p] == sz  # resident files untouched
 
-    probe = phrase_probe(spark, idx, "slow", "fast", n_buckets=8)
+    probe = phrase_probe(spark, idx, "slow", "fast")
     got = {(r.doc_id, r.n_occurrences) for r in probe.collect()}
     sp = F.split("text", " ")
     want = {
@@ -915,45 +914,43 @@ def test_inverted_ingest_stream_extends_postings(spark, tmp_path):
 
 def test_inverted_postings_compaction_preserves_probe(spark, tmp_path):
     """St5 for the text tier: streaming appends accrete one file per
-    micro-batch per bucket; compact_layout must shrink the file count
-    while keeping phrase-probe results identical and the bucket
-    partitioning (pruning) intact."""
+    micro-batch per bucket; inverted_compact must shrink the live file
+    count while keeping phrase-probe results identical and the bucket
+    pruning intact."""
     from cnc_visionsearch_spark.operators.text_index import (
         inverted_append,
         inverted_build,
+        inverted_compact,
         phrase_probe,
+        term_bucket,
     )
-    from cnc_visionsearch_spark.plans import formatted_plan
-    from cnc_visionsearch_spark.sources.formats import compact_layout
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
     docs = load_table(spark, SF, "documents")
     idx = str(tmp_path / "inv")
     inverted_build(docs.filter(F.col("doc_id") % 2 == 0), idx, n_buckets=4)
     for i in (1, 3):  # two appends -> extra files per touched bucket
-        inverted_append(docs.filter(F.col("doc_id") % 4 == i), idx, n_buckets=4)
+        inverted_append(docs.filter(F.col("doc_id") % 4 == i), idx)
 
     def n_files():
-        n = 0
-        for dirpath, _dirs, files in os.walk(f"{idx}/postings"):
-            n += sum(f.endswith(".parquet") for f in files)
-        return n
+        return sum(1 for _p, b in TLog(idx).snapshot().files if b < 4)
 
     before_files = n_files()
     before = {
         (r.doc_id, r.n_occurrences)
-        for r in phrase_probe(spark, idx, "slow", "fast", n_buckets=4).collect()
+        for r in phrase_probe(spark, idx, "slow", "fast").collect()
     }
-    compact_layout(spark, f"{idx}/postings", partition_by=["bucket"])
+    inverted_compact(spark, idx)
     assert n_files() < before_files
-    probe = phrase_probe(spark, idx, "slow", "fast", n_buckets=4)
+    probe = phrase_probe(spark, idx, "slow", "fast")
     after = {(r.doc_id, r.n_occurrences) for r in probe.collect()}
     assert after == before and after
-    pf = [
-        ln
-        for ln in formatted_plan(probe).splitlines()
-        if "PartitionFilters" in ln
-    ]
-    assert pf and any("bucket" in ln for ln in pf)
+    scanned = {
+        int(f.split("_tb=")[1].split("/")[0])
+        for f in probe.inputFiles()
+        if "_tb=" in f
+    }
+    assert scanned and scanned <= {term_bucket(t, 4) for t in ("slow", "fast")}
 
 
 def test_bm25_serving_stream_matches_batch_probe(spark, tmp_path):
@@ -993,7 +990,6 @@ def test_bm25_serving_stream_matches_batch_probe(spark, tmp_path):
         out,
         str(tmp_path / "ckpt"),
         k=5,
-        n_buckets=8,
         max_files_per_trigger=1,
     ).start().awaitTermination(180)
 
@@ -1003,7 +999,7 @@ def test_bm25_serving_stream_matches_batch_probe(spark, tmp_path):
     }
     batch = {
         (r.qid, r.doc_id, r.n_terms, r.score_q)
-        for r in bm25_multi_probe(spark, path, qs, n_buckets=8, k=5).collect()
+        for r in bm25_multi_probe(spark, path, qs, k=5).collect()
     }
     assert streamed == batch and streamed
 
@@ -1065,7 +1061,8 @@ def test_hnsw_ingest_stream_inserts_reachable_nodes(spark, tmp_path):
     reachable by later searches (through edges appended into the
     touched (layer, bucket) partitions), pre-existing graph files
     survive byte-identical except touched back-edge partitions, and
-    the entry artifact is promoted if a streamed node out-levels it."""
+    the entry (commit meta) is promoted if a streamed node out-levels
+    it."""
     import hashlib
 
     from cnc_visionsearch_spark.operators.graph_ann import (
@@ -1082,9 +1079,12 @@ def test_hnsw_ingest_stream_inserts_reachable_nodes(spark, tmp_path):
     hnsw_build(
         emb.filter(F.col("vec_id") < 300), path, m=8, m_upper=6
     )
-    base_entry_lvl = int(
-        spark.read.parquet(f"{path}/entry").first()["level"]
-    )
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    def entry_level():
+        return int(TLog(path).snapshot().meta["entry"]["level"])
+
+    base_entry_lvl = entry_level()
 
     raw = load_table(spark, SF, "embeddings")
     # 40 streamed nodes: insert-by-search costs O(batch) index
@@ -1108,10 +1108,7 @@ def test_hnsw_ingest_stream_inserts_reachable_nodes(spark, tmp_path):
         ids = [i for i, _ in hnsw_search(spark, path, qv, k=5, ef=16, hops=4)]
         assert vid in ids
     # entry level can only stay or rise
-    assert (
-        int(spark.read.parquet(f"{path}/entry").first()["level"])
-        >= base_entry_lvl
-    )
+    assert entry_level() >= base_entry_lvl
 
 
 def test_sequence_match_stream_matches_batch_regex(spark, tmp_path):
@@ -1663,7 +1660,6 @@ def test_maxsim_serving_stream_matches_batch_probe(spark, tmp_path):
         out,
         str(tmp_path / "ckpt"),
         k=5,
-        n_buckets=8,
         max_files_per_trigger=1,
     ).start().awaitTermination(180)
 
@@ -1674,7 +1670,7 @@ def test_maxsim_serving_stream_matches_batch_probe(spark, tmp_path):
     batch = {
         (r.qid, r.doc_id, r.score_q)
         for r in maxsim_multi_probe(
-            spark, path, qs, docs, n_buckets=8, k=5,
+            spark, path, qs, docs, k=5,
             min_token_hits="all",
         ).collect()
     }

@@ -1,7 +1,8 @@
 """Derived artifacts under the transaction log (r8 verdict #1):
-mode-invariance (tlog layout == legacy layout for every probe) and
-racing-writer arbitration per artifact — a concurrent append+vacuum
-either SERIALIZES (disjoint conflict domains) or raises
+lifecycle invariance (an appended/deleted/vacuumed/compacted layout
+== a from-scratch build or an independent reference for every probe)
+and racing-writer arbitration per artifact — a concurrent
+append+vacuum either SERIALIZES (disjoint conflict domains) or raises
 TLogConflictError cleanly and recomputes under run_transaction; no
 interleave loses data or tears a read."""
 
@@ -80,43 +81,42 @@ def _inject_before_first_rewrite(monkeypatch, inject_fn):
 
 
 def test_inverted_tlog_mode_invariant_lifecycle(spark, tmp_path):
-    """build -> append -> delete -> vacuum -> compact on a tlog layout
-    yields byte-identical probe results to the same lifecycle on a
-    legacy layout (the same read seams serve both)."""
+    """build -> append -> delete -> vacuum -> compact yields probe
+    results byte-identical to a from-scratch build over the final
+    corpus (the lifecycle's live documents)."""
     docs = _docs(spark)
     base = docs.filter(F.col("doc_id") < 150)
     day2 = docs.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 200))
+    deleted = [5, 7, 160]
 
-    def run(path, use_tlog):
-        inverted_build(base, path, n_buckets=8, use_tlog=use_tlog)
-        inverted_append(day2, path, n_buckets=8)
-        inverted_delete(spark, path, [5, 7, 160])
-        pre = (
-            bm25_probe(spark, path, ["vector", "scan"], n_buckets=8)
+    def probe(path):
+        return (
+            bm25_probe(spark, path, ["vector", "scan"])
             .orderBy(F.col("score_q").desc(), "doc_id")
             .collect()
         )
-        inverted_vacuum(spark, path)
-        post = (
-            bm25_probe(spark, path, ["vector", "scan"], n_buckets=8)
-            .orderBy(F.col("score_q").desc(), "doc_id")
-            .collect()
-        )
-        assert pre == post  # vacuum never changes results
-        return post
 
-    legacy = run(str(tmp_path / "leg"), False)
-    tl = run(str(tmp_path / "tl"), True)
-    assert legacy == tl
-    # compact settles to one file per live domain, results unchanged
-    inverted_compact(spark, str(tmp_path / "tl"))
-    after = (
-        bm25_probe(spark, str(tmp_path / "tl"), ["vector", "scan"], n_buckets=8)
-        .orderBy(F.col("score_q").desc(), "doc_id")
-        .collect()
+    tl = str(tmp_path / "tl")
+    inverted_build(base, tl, n_buckets=8)
+    inverted_append(day2, tl)
+    inverted_delete(spark, tl, deleted)
+    pre = probe(tl)
+    inverted_vacuum(spark, tl)
+    assert probe(tl) == pre  # vacuum never changes results
+
+    ref = str(tmp_path / "ref")
+    inverted_build(
+        docs.filter(
+            (F.col("doc_id") < 200) & ~F.col("doc_id").isin(deleted)
+        ),
+        ref,
+        n_buckets=8,
     )
-    assert after == tl
-    assert read_doclens(spark, str(tmp_path / "tl")).count() == 197
+    assert pre == probe(ref) and pre
+    # compact settles to one file per live domain, results unchanged
+    inverted_compact(spark, tl)
+    assert probe(tl) == pre
+    assert read_doclens(spark, tl).count() == 197
 
 
 def test_inverted_racing_append_vs_vacuum_conflicts_and_recomputes(
@@ -129,9 +129,7 @@ def test_inverted_racing_append_vs_vacuum_conflicts_and_recomputes(
     delete's effect — nothing lost, nothing resurrected."""
     path = str(tmp_path / "inv")
     docs = _docs(spark)
-    inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
-    )
+    inverted_build(docs.filter(F.col("doc_id") < 100), path, n_buckets=8)
     inverted_delete(spark, path, [5, 7])
     racing = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
     state = _inject_before_first_rewrite(
@@ -151,6 +149,154 @@ def test_inverted_racing_append_vs_vacuum_conflicts_and_recomputes(
     assert read_postings(spark, path).filter(
         F.col("doc_id").isin(5, 7)
     ).count() == 0
+
+
+def _py_bm25(texts: dict, terms, k1: float = 1.2, b: float = 0.75) -> dict:
+    """Pure-Python BM25 with bm25_probe's exact double chain and 1e-9
+    quantization: {doc_id: (n_terms, score_q)}."""
+    import math
+
+    toks = {d: t.split(" ") for d, t in texts.items()}
+    n_docs = float(len(toks))
+    avgdl = float(sum(len(v) for v in toks.values())) / n_docs
+    out: dict = {}
+    for term in set(terms):
+        tf = {d: v.count(term) for d, v in toks.items() if term in v}
+        df = float(len(tf))
+        idf = (n_docs - df + 0.5) / (df + 0.5)
+        for d, c in tf.items():
+            denom = c + k1 * (1.0 - b + b * float(len(toks[d])) / avgdl)
+            sq = math.floor(idf * (c * (k1 + 1.0)) / denom * 1e9 + 0.5)
+            n, tot = out.get(d, (0, 0))
+            out[d] = (n + 1, tot + sq)
+    return out
+
+
+def test_bm25_probe_of_a_bucket_without_files_is_empty(spark, tmp_path):
+    """A term whose bucket holds no postings file (64 buckets over a
+    40-term vocabulary) probes to 0 rows — the reader hands back a
+    typed empty frame, never None."""
+    from cnc_visionsearch_spark.operators.text_index import term_bucket
+
+    vocab = [f"t{i}" for i in range(40)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(vocab[(i + j) % 40] for j in range(5))) for i in range(40)],
+        "doc_id bigint, text string",
+    )
+    path = str(tmp_path / "inv")
+    inverted_build(docs, path, n_buckets=64)
+    used = {term_bucket(t, 64) for t in vocab}
+    oov = next(
+        f"x{i}" for i in range(1000) if term_bucket(f"x{i}", 64) not in used
+    )
+    assert bm25_probe(spark, path, [oov]).collect() == []
+    # a mixed probe still ranks the in-vocabulary term alone
+    got = {
+        r.doc_id: (r.n_terms, r.score_q)
+        for r in bm25_probe(spark, path, [oov, "t3"]).collect()
+    }
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    assert got == _py_bm25(texts, [oov, "t3"]) and got
+
+
+def test_probes_read_n_buckets_from_the_layout(spark, tmp_path):
+    """The bucket count comes from the layout's commit meta, not the
+    caller: an 8-bucket layout probed with terms whose 16-bucket hash
+    is >= 8 matches the pure-Python BM25 answer."""
+    from cnc_visionsearch_spark.operators.text_index import term_bucket
+
+    docs = _docs(spark).filter(F.col("doc_id") < 200)
+    path = str(tmp_path / "inv")
+    inverted_build(docs, path, n_buckets=8)
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    vocab = sorted({t for v in texts.values() for t in v.split(" ")})
+    terms = [t for t in vocab if term_bucket(t, 16) >= 8][:2]
+    assert len(terms) == 2
+    got = {
+        r.doc_id: (r.n_terms, r.score_q)
+        for r in bm25_probe(spark, path, terms).collect()
+    }
+    assert got == _py_bm25(texts, terms) and got
+
+
+# ensure-builders: the init commit is the "built" marker. Each case is
+# (query module, ensure function, a registered query reading it).
+_ENSURED = [
+    ("queries_analytics", "ensure_inverted_built", "text_inverted_bm25_topk"),
+    ("queries_hybrid", "ensure_token_ivf_built", "text_maxsim_ivf_pruned_topk"),
+    ("queries_ann_graph", "ensure_nsw_built", "ann_nsw_beam_topk"),
+    ("queries_ann_graph", "ensure_hnsw_built", "ann_hnsw_descend_topk"),
+    ("queries_dedup", "ensure_minhash_store_built", "dedup_incremental_minhash"),
+]
+
+
+@pytest.mark.parametrize("module,ensure,query", _ENSURED)
+def test_ensure_rebuilds_failed_and_legacy_layouts(
+    spark, tmp_path, monkeypatch, module, ensure, query
+):
+    """(a) a build that dies just before its init commit leaves no
+    built layout, and (b) a directory holding an old legacy layout
+    with its ``_BUILT`` marker is not misread: the next ensure call
+    rebuilds both as transaction-log layouts, and the registered query
+    then matches its DuckDB oracle."""
+    import glob
+    import importlib
+    import shutil
+
+    import duckdb
+
+    from cnc_visionsearch_spark import queries_ann, queries_ann_graph
+    from cnc_visionsearch_spark.registry import all_oracles, all_queries
+
+    root = str(tmp_path / "artifacts")
+    monkeypatch.setattr(queries_ann, "_ARTIFACT_ROOT", root)
+    monkeypatch.setattr(queries_ann_graph, "_ARTIFACT_ROOT", root)
+    fn = getattr(importlib.import_module(f"cnc_visionsearch_spark.{module}"), ensure)
+
+    orig = TLog.commit
+    state = {"armed": True}
+
+    def failing_commit(self, *a, **k):
+        if state["armed"]:
+            state["armed"] = False
+            raise RuntimeError("injected crash before the init commit")
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(TLog, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        fn(spark, SF)
+    (log_dir,) = glob.glob(f"{root}/*/*/_tlog")
+    path = os.path.dirname(log_dir)
+    assert TLog(path).latest_version() == 0  # (a): nothing committed
+    # (b): the same directory now holds an old legacy layout
+    shutil.rmtree(path)
+    os.makedirs(os.path.join(path, "graph", "src_bucket=0"))
+    for marker in ("_BUILT", "_APPENDED"):
+        open(os.path.join(path, marker), "w").close()
+    assert fn(spark, SF) == path
+    assert TLog(path).latest_version() >= 1
+    assert not os.path.exists(os.path.join(path, "graph"))
+
+    df = all_queries()[query](spark, SF)
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+    res = con.sql(all_oracles()[query])
+    cols = [d[0] for d in res.description]
+
+    def canon(names, rows):  # scripts/check_correctness.py's rule
+        order = sorted(range(len(names)), key=lambda i: names[i])
+        return sorted(
+            tuple(
+                repr(r[i]) if isinstance(r[i], float) else str(r[i])
+                for i in order
+            )
+            for r in rows
+        )
+
+    got = canon(df.columns, [tuple(r) for r in df.collect()])
+    assert sorted(df.columns) == sorted(cols)
+    assert got == canon(cols, res.fetchall()) and got
 
 
 # ---------------------------------------------------------------- IVF
@@ -592,25 +738,38 @@ def test_store_probe_divergent_text_latest_batch_wins(spark):
 
 
 def test_inverted_append_txn_replay_commits_nothing(spark, tmp_path):
-    """Exactly-once index ingest on a transactional layout: the same
-    batch appended twice under one txn key lands ONCE (the replay
-    finds its txn in the log and commits nothing); a legacy layout
-    refuses txn appends loudly instead of silently double-appending."""
+    """Exactly-once index ingest: the same batch appended twice under
+    one txn key lands ONCE (the replay finds its txn in the log and
+    commits nothing)."""
     path = str(tmp_path / "inv")
     docs = _docs(spark)
-    inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
-    )
+    inverted_build(docs.filter(F.col("doc_id") < 100), path, n_buckets=8)
     day2 = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 130))
     inverted_append(day2, path, txn=("ing", 1))
     n1 = read_doclens(spark, path).count()
     inverted_append(day2, path, txn=("ing", 1))  # at-least-once replay
     assert read_doclens(spark, path).count() == n1 == 130
-    # legacy layouts cannot honor the idempotence contract
-    leg = str(tmp_path / "leg")
-    inverted_build(docs.filter(F.col("doc_id") < 50), leg, n_buckets=8)
-    with pytest.raises(ValueError, match="transactional layout"):
-        inverted_append(day2, leg, txn=("ing", 1))
+
+
+def test_inverted_append_keeps_postings_unique(spark, tmp_path):
+    """The (term, doc_id)-uniqueness invariant of the postings — what
+    maxsim_multi_probe's count(*) candidate rule relies on: build,
+    append NEW documents, replay one append under the same txn; every
+    (term, doc_id) pair appears exactly once."""
+    path = str(tmp_path / "inv")
+    docs = _docs(spark)
+    inverted_build(docs.filter(F.col("doc_id") < 100), path, n_buckets=8)
+    inverted_append(
+        docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 130)),
+        path,
+        txn=("ing", 1),
+    )
+    day3 = docs.filter((F.col("doc_id") >= 130) & (F.col("doc_id") < 160))
+    inverted_append(day3, path, txn=("ing", 2))
+    inverted_append(day3, path, txn=("ing", 2))  # replay
+    posts = read_postings(spark, path)
+    assert posts.select("doc_id").distinct().count() == 160
+    assert posts.count() == posts.select("term", "doc_id").distinct().count()
 
 
 def test_inverted_ingest_stream_exactly_once_on_tlog_layout(
@@ -625,9 +784,7 @@ def test_inverted_ingest_stream_exactly_once_on_tlog_layout(
 
     docs = _docs(spark)
     path = str(tmp_path / "inv")
-    inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
-    )
+    inverted_build(docs.filter(F.col("doc_id") < 100), path, n_buckets=8)
     stream_dir = str(tmp_path / "in")
     docs.filter(
         (F.col("doc_id") >= 100) & (F.col("doc_id") < 160)
@@ -637,23 +794,20 @@ def test_inverted_ingest_stream_exactly_once_on_tlog_layout(
         stream_dir,
         path,
         str(tmp_path / "ckpt"),
-        n_buckets=8,
         max_files_per_trigger=1,
     )
     q.awaitTermination(180)
     assert read_doclens(spark, path).count() == 160
     got = (
-        bm25_probe(spark, path, ["vector", "scan"], n_buckets=8)
+        bm25_probe(spark, path, ["vector", "scan"])
         .orderBy(F.col("score_q").desc(), "doc_id")
         .collect()
     )
     # one-shot twin over the same final corpus
     ref = str(tmp_path / "ref")
-    inverted_build(
-        docs.filter(F.col("doc_id") < 160), ref, n_buckets=8, use_tlog=True
-    )
+    inverted_build(docs.filter(F.col("doc_id") < 160), ref, n_buckets=8)
     want = (
-        bm25_probe(spark, ref, ["vector", "scan"], n_buckets=8)
+        bm25_probe(spark, ref, ["vector", "scan"])
         .orderBy(F.col("score_q").desc(), "doc_id")
         .collect()
     )
@@ -742,9 +896,7 @@ def test_inverted_concurrent_mixed_workload_serializes(spark, tmp_path):
 
     path = str(tmp_path / "inv")
     docs = _docs(spark)
-    inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
-    )
+    inverted_build(docs.filter(F.col("doc_id") < 100), path, n_buckets=8)
     ranges = [(100, 130), (130, 160), (160, 190), (190, 220)]
     deletes = [[3, 17], [105, 42]]
     errs: list = []
@@ -793,7 +945,7 @@ def test_inverted_concurrent_mixed_workload_serializes(spark, tmp_path):
     dl = read_doclens(spark, path)
     assert dl.count() == dl.select("doc_id").distinct().count()
     got = (
-        bm25_probe(spark, path, ["vector", "scan"], n_buckets=8)
+        bm25_probe(spark, path, ["vector", "scan"])
         .orderBy(F.col("score_q").desc(), "doc_id")
         .collect()
     )
@@ -804,10 +956,9 @@ def test_inverted_concurrent_mixed_workload_serializes(spark, tmp_path):
         ),
         ref,
         n_buckets=8,
-        use_tlog=True,
     )
     want = (
-        bm25_probe(spark, ref, ["vector", "scan"], n_buckets=8)
+        bm25_probe(spark, ref, ["vector", "scan"])
         .orderBy(F.col("score_q").desc(), "doc_id")
         .collect()
     )
@@ -815,37 +966,80 @@ def test_inverted_concurrent_mixed_workload_serializes(spark, tmp_path):
 
 
 # ---------------------------------------------------------------- NSW graph
-# r10: the graph tier joins the transactional-artifact doctrine (the
-# r9 scope exclusion "a graph-ANN append racing a compact is still
-# unarbitrated" closed): nsw_build(use_tlog=True) lays the edge table
-# down as ONE init commit with src_bucket conflict domains, appends
-# are blind commits, nsw_compact is a rewrite commit over the touched
-# buckets.
+# The graph tier under the log: nsw_build lays the edge table down as
+# ONE init commit with src_bucket conflict domains, appends are blind
+# commits, nsw_compact is a rewrite commit over the touched buckets.
+# Searches are checked against a pure-Python replay over the exact
+# top-m graph (the same sequential distance fold, so ties break alike).
+
+
+def _py_graph(vecs: dict, m: int, nodes=None) -> dict:
+    """Exact top-``m`` neighbor lists (ties by dst) over ``nodes``."""
+    import numpy as np
+
+    from cnc_visionsearch_spark.operators.ann import _seq_l2_sq
+
+    ids = sorted(nodes if nodes is not None else vecs)
+    mat = np.array([vecs[i] for i in ids])
+    adj = {}
+    for n, src in enumerate(ids):
+        # numpy preselects, the sequential fold decides (bit-exact)
+        approx = ((mat - mat[n]) ** 2).sum(axis=1)
+        cand = [ids[j] for j in np.argsort(approx)[: m + 8] if ids[j] != src]
+        exact = sorted((_seq_l2_sq(vecs[src], vecs[d]), d) for d in cand)
+        adj[src] = [d for _, d in exact[:m]]
+    return adj
+
+
+def _py_beam(dist, adj: dict, seeds: dict, k: int, ef: int, hops: int):
+    """nsw_search's beam: expand every beam node, keep the top-ef by
+    (distance, id), stop at the fixpoint."""
+    beam = dict(sorted(seeds.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
+    for _ in range(hops):
+        ids = sorted(beam)
+        for s in ids:
+            for d in adj.get(s, ()):
+                beam.setdefault(d, dist(d))
+        nxt = dict(sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
+        beam = nxt
+        if sorted(nxt) == ids:
+            break
+    return sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:k]
+
+
+def _vec_map(emb) -> dict:
+    return {
+        int(r["vec_id"]): [float(x) for x in r["nvec"]] for r in emb.collect()
+    }
 
 
 def test_nsw_tlog_mode_invariant_search_and_blind_append(spark, tmp_path):
-    """A tlog-mode NSW layout serves BIT-IDENTICAL beam searches to the
-    legacy layout (same read seams), and appends land as blind commits:
-    resident edge files stay byte-identical, appended nodes reachable."""
+    """An NSW layout serves beam searches BIT-IDENTICAL to a pure-Python
+    replay over the exact top-m graph, and appends land as blind
+    commits: resident edge files stay byte-identical, appended nodes
+    reachable."""
     import os
 
+    from cnc_visionsearch_spark.operators.ann import _seq_l2_sq
     from cnc_visionsearch_spark.operators.graph_ann import (
         nsw_append,
         nsw_build,
         nsw_search,
     )
 
-    emb = _emb(spark)
-    q = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 5).first()["nvec"]
-    ]
-    leg, tl = str(tmp_path / "leg"), str(tmp_path / "tl")
-    nsw_build(emb, leg, m=6, n_buckets=8, n_entries=2)
-    nsw_build(emb, tl, m=6, n_buckets=8, n_entries=2, use_tlog=True)
-    a = nsw_search(spark, leg, q, k=10, ef=16, hops=4)
-    b = nsw_search(spark, tl, q, k=10, ef=16, hops=4)
-    assert a == b and a
+    emb = _emb(spark).filter(F.col("vec_id") < 200)
+    vecs = _vec_map(emb)
+    q = vecs[5]
+    tl = str(tmp_path / "tl")
+    nsw_build(emb, tl, m=6, n_buckets=8, n_entries=2)
+    got = nsw_search(spark, tl, q, k=10, ef=16, hops=4)
+
+    def dist(i):
+        return _seq_l2_sq(vecs[i], q)
+
+    entries = {i: dist(i) for i in sorted(vecs)[:2]}
+    want = _py_beam(dist, _py_graph(vecs, 6), entries, k=10, ef=16, hops=4)
+    assert got == want and got
 
     def sig(root):
         out = {}
@@ -891,12 +1085,7 @@ def test_nsw_tlog_compact_racing_append_conflicts_and_recomputes(
     emb = _emb(spark)
     path = str(tmp_path / "tl")
     nsw_build(
-        emb.filter(F.col("vec_id") < 300),
-        path,
-        m=6,
-        n_buckets=8,
-        n_entries=2,
-        use_tlog=True,
+        emb.filter(F.col("vec_id") < 300), path, m=6, n_buckets=8, n_entries=2
     )
     nsw_append(
         spark,
@@ -925,19 +1114,6 @@ def test_nsw_tlog_compact_racing_append_conflicts_and_recomputes(
     assert cnt and max(cnt.values()) == 1  # every bucket settled to 1 file
 
 
-def test_nsw_compact_refuses_legacy_layouts(spark, tmp_path):
-    from cnc_visionsearch_spark.operators.graph_ann import (
-        nsw_build,
-        nsw_compact,
-    )
-
-    emb = _emb(spark)
-    path = str(tmp_path / "leg")
-    nsw_build(emb.limit(50), path, m=4, n_buckets=4, n_entries=2)
-    with pytest.raises(ValueError, match="transactional layout"):
-        nsw_compact(spark, path)
-
-
 def test_tlog_graph_builds_validate_conflict_domain_bounds(spark, tmp_path):
     """r10 advice: the (layer, bucket) conflict-domain tag is
     layer * TLOG_HNSW_LAYER_STRIDE + bucket, so n_buckets >= STRIDE
@@ -955,14 +1131,10 @@ def test_tlog_graph_builds_validate_conflict_domain_bounds(spark, tmp_path):
     emb = _emb(spark).limit(10)
     hp = str(tmp_path / "h")
     with pytest.raises(ValueError, match="TLOG_HNSW_LAYER_STRIDE"):
-        hnsw_build(
-            emb, hp, n_buckets=TLOG_HNSW_LAYER_STRIDE, use_tlog=True
-        )
+        hnsw_build(emb, hp, n_buckets=TLOG_HNSW_LAYER_STRIDE)
     np_ = str(tmp_path / "n")
     with pytest.raises(ValueError, match="entries conflict-domain tag"):
-        nsw_build(
-            emb, np_, n_buckets=TLOG_NSW_ENTRIES_TAG, use_tlog=True
-        )
+        nsw_build(emb, np_, n_buckets=TLOG_NSW_ENTRIES_TAG)
     from cnc_visionsearch_spark.operators.ann import (
         TLOG_TAG_STRIDE_GAP,
         shard_build,
@@ -978,15 +1150,50 @@ def test_tlog_graph_builds_validate_conflict_domain_bounds(spark, tmp_path):
     assert not _os.path.exists(_os.path.join(np_, "_tlog"))
 
 
+def _py_hnsw_search(vecs, q, m, m_upper, mult, max_level, k, ef, hops, upper_hops):
+    """Pure-Python hnsw_search over the exact layered graph: hash-level
+    pyramid, greedy upper-layer descent from the (max level, min id)
+    entry, then the layer-0 beam."""
+    import hashlib
+
+    from cnc_visionsearch_spark.operators.ann import _seq_l2_sq
+
+    def level(i):
+        u = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16)
+        return max([0] + [l for l in range(1, max_level + 1) if u % mult**l == 0])
+
+    lv = {i: level(i) for i in vecs}
+    adj = {
+        l: _py_graph(
+            vecs, m if l == 0 else m_upper, [i for i in vecs if lv[i] >= l]
+        )
+        for l in range(max_level + 1)
+    }
+
+    def dist(i):
+        return _seq_l2_sq(vecs[i], q)
+
+    cur = min(vecs, key=lambda i: (-lv[i], i))
+    cur_d = dist(cur)
+    for layer in range(min(max_level, lv[cur]), 0, -1):
+        for _ in range(upper_hops):
+            best_d, best = min(
+                [(cur_d, cur)] + [(dist(d), d) for d in adj[layer].get(cur, ())]
+            )
+            if best == cur:
+                break
+            cur, cur_d = best, best_d
+    return _py_beam(dist, adj[0], {cur: cur_d}, k=k, ef=ef, hops=hops)
+
+
 def test_hnsw_tlog_mode_invariant_and_meta_entry_promotion(
     spark, tmp_path
 ):
-    """HNSW joins the doctrine: tlog-mode descend == legacy descend
-    bit-for-bit; an append whose node out-levels the entry PROMOTES it
-    through a meta-key commit (read-modify-write serialized by
-    base_version — the arbitration the legacy directory swap lacked),
-    and hnsw_compact settles every (layer, bucket) domain to one file
-    with results unchanged."""
+    """HNSW descend == a pure-Python replay over the exact layered
+    graph bit-for-bit; an append whose node out-levels the entry
+    PROMOTES it through a meta-key commit (read-modify-write serialized
+    by base_version), and hnsw_compact settles every (layer, bucket)
+    domain to one file with results unchanged."""
     from collections import Counter
 
     from cnc_visionsearch_spark.operators.graph_ann import (
@@ -1001,7 +1208,9 @@ def test_hnsw_tlog_mode_invariant_and_meta_entry_promotion(
     lv = emb.select(
         "vec_id", "nvec", hnsw_level_col("vec_id", 8, 3).alias("level")
     )
-    base = lv.filter(F.col("level") <= 1).select("vec_id", "nvec")
+    base = lv.filter((F.col("level") <= 1) & (F.col("vec_id") < 250)).select(
+        "vec_id", "nvec"
+    )
     hi = (
         lv.filter(F.col("level") >= 2)
         .orderBy("vec_id")
@@ -1009,32 +1218,31 @@ def test_hnsw_tlog_mode_invariant_and_meta_entry_promotion(
         .first()
     )
     assert hi is not None, "fixture has no level>=2 node"
-    leg, tl = str(tmp_path / "leg"), str(tmp_path / "tl")
-    for p, use in ((leg, False), (tl, True)):
-        hnsw_build(
-            base, p, m=6, m_upper=4, level_mult=8, max_level=3,
-            n_buckets=8, use_tlog=use,
-        )
-    qid = base.orderBy("vec_id").first()
-    q = [float(x) for x in qid["nvec"]]
-    a = hnsw_search(spark, leg, q, k=10, ef=16, hops=4, upper_hops=2)
-    b = hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2)
-    assert a == b and a
-    newbie = spark.createDataFrame(
-        [(int(hi["vec_id"]), [float(x) for x in hi["nvec"]])],
-        "vec_id bigint, nvec array<double>",
+    tl = str(tmp_path / "tl")
+    hnsw_build(
+        base, tl, m=6, m_upper=4, level_mult=8, max_level=3, n_buckets=8
     )
-    hnsw_append(spark, leg, newbie)
+    vecs = _vec_map(base)
+    q = vecs[min(vecs)]
+    got = hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2)
+    want = _py_hnsw_search(
+        vecs, q, m=6, m_upper=4, mult=8, max_level=3,
+        k=10, ef=16, hops=4, upper_hops=2,
+    )
+    assert got == want and got
+    hv = [float(x) for x in hi["nvec"]]
+    newbie = spark.createDataFrame(
+        [(int(hi["vec_id"]), hv)], "vec_id bigint, nvec array<double>"
+    )
     hnsw_append(spark, tl, newbie)
-    a2 = hnsw_search(spark, leg, q, k=10, ef=16, hops=4, upper_hops=2)
-    b2 = hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2)
-    assert a2 == b2 and a2
     # the promotion landed as commit meta, not a directory swap
     ent = TLog(tl).snapshot().meta["entry"]
     assert int(ent["vec_id"]) == int(hi["vec_id"])
     assert int(ent["level"]) >= 2
+    a2 = hnsw_search(spark, tl, hv, k=10, ef=16, hops=4, upper_hops=2)
+    assert a2[0] == (int(hi["vec_id"]), 0.0)  # the new entry is found
     # compact: every domain settles to one live file, results unchanged
     run_transaction(lambda: hnsw_compact(spark, tl))
-    assert hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2) == a2
+    assert hnsw_search(spark, tl, hv, k=10, ef=16, hops=4, upper_hops=2) == a2
     cnt = Counter(b for _p, b in TLog(tl).snapshot().files if b is not None)
     assert cnt and max(cnt.values()) == 1
